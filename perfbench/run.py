@@ -16,8 +16,6 @@ JSON object as the last line of stdout:
 pass, query and operator) goes to `.bench_out/`, and traced runs also write
 their spans there. Scratch data lives in `.bench_work/<run>/` and is removed
 when the run ends.
-
-`--capture DIR` only writes the capture (both forms) and its manifest.
 """
 
 import argparse
@@ -101,15 +99,11 @@ def build(env):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", choices=["scan_full", "scan_triage"])
+    ap.add_argument("--workload", choices=["scan_full", "scan_triage"], required=True)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=int, default=15)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--mib", type=int, help="capture size in MiB (default: the workload's)")
-    ap.add_argument("--capture", metavar="DIR", help="only write the capture and its manifest")
     args = ap.parse_args()
-    if not args.capture and not args.workload:
-        ap.error("--workload is required")
 
     for need in (os.path.join(ROOT, "build.sbt"), os.path.join(ROOT, "src", "main", "scala"), FIXTURES):
         if not os.path.exists(need):
@@ -121,7 +115,7 @@ def main():
     with open(CLASSPATH) as f:
         cp = f.read().strip()
 
-    tag = f"{args.workload}-{args.seed}-{args.trace}-{os.getpid()}" if not args.capture else f"capture-{os.getpid()}"
+    tag = f"{args.workload}-{args.seed}-{args.trace}-{os.getpid()}"
     work = os.path.join(ROOT, ".bench_work", tag)
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     java = os.path.join(env["JAVA_HOME"], "bin", "java") if env.get("JAVA_HOME") else "java"
@@ -132,18 +126,10 @@ def main():
         jvm += ["--add-opens", f"{o}=ALL-UNNAMED"]
     jvm += ["-cp", cp]
     try:
-        if args.capture:
-            code, out = run_child(jvm + ["perfbench.Capture", "--fixtures", FIXTURES, "--seed", str(args.seed),
-                                         "--mib", str(args.mib or 64), "--out", os.path.abspath(args.capture),
-                                         "--single", "--ring"], ROOT, env, RUN_TIMEOUT_S, capture=True)
-            print("\n".join(out))
-            sys.exit(code)
-        main = ["perfbench.Main", "--workload", args.workload, "--seed", str(args.seed),
+        cmd = ["perfbench.Main", "--workload", args.workload, "--seed", str(args.seed),
                 "--seconds", str(args.seconds), "--trace", str(args.trace), "--fixtures", FIXTURES,
                 "--work", work, "--out", os.path.join(ROOT, ".bench_out")]
-        if args.mib:
-            main += ["--mib", str(args.mib)]
-        code, out = run_child(jvm + main, ROOT, env, RUN_TIMEOUT_S, capture=True)
+        code, out = run_child(jvm + cmd, ROOT, env, RUN_TIMEOUT_S, capture=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     for line in out[:-1]:

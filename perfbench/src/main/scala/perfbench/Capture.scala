@@ -257,10 +257,10 @@ object Capture {
   }
 
   /** Write the capture under `outDir`: `capture.pcap` (single file) and/or
-    * `ring/ring_NNNNN.pcap` files rotated after `ringBytes`, the way
+    * `ring/ring_NNNNN.pcap` files rotated after `Workload.RingBytes`, the way
     * `dumpcap -b filesize` rotates, plus `manifest.json`. */
   def generate(fixtures: File, seed: Long, targetBytes: Long, outDir: File,
-      single: Boolean, ring: Boolean, ringBytes: Long): Manifest = {
+      single: Boolean, ring: Boolean): Manifest = {
     outDir.mkdirs()
     val counts = replicaCounts(readSources(fixtures), targetBytes)
     val one = if (single) Some(new PcapSink(new File(outDir, "capture.pcap"))) else None
@@ -279,7 +279,7 @@ object Capture {
       tcpKey(p.data).foreach { k => tcpPackets += 1; streams.add(k) }
       one.foreach(_.write(p))
       if (ring) {
-        if (ringSink != null && ringSink.bytes >= ringBytes) { ringDone += ringSink.close(); ringSink = null }
+        if (ringSink != null && ringSink.bytes >= Workload.RingBytes) { ringDone += ringSink.close(); ringSink = null }
         if (ringSink == null)
           ringSink = new PcapSink(new File(ringDir, f"ring_${ringDone.knownSize + 1}%05d.pcap"))
         ringSink.write(p)
@@ -308,13 +308,5 @@ object Capture {
         Some((x._1 << 16 | x._2, y._1 << 16 | y._2))
       }
     }
-  }
-
-  /** `Capture --fixtures DIR --seed N --mib M --out DIR [--single] [--ring]` */
-  def main(args: Array[String]): Unit = {
-    val a = Args(args)
-    val m = generate(new File(a("fixtures")), a("seed").toLong, a("mib").toLong << 20,
-      new File(a("out")), a.flag("single"), a.flag("ring"), Workload.RingBytes)
-    println(m.json)
   }
 }

@@ -26,6 +26,10 @@ final class Ladder(capture: File, packets: Int, fixtures: File, seed: Long, trac
   val metrics = mutable.LinkedHashMap.empty[String, (Double, String)]
   /** Extra detail for the record (not reported as metrics). */
   val detail = mutable.LinkedHashMap.empty[String, Any]
+  /** Rungs that could not time what the scan does. */
+  val failures = mutable.ArrayBuffer.empty[String]
+  /** Splits `PcapIndex` planned for the capture at the scan's split size. */
+  var splits = 0L
 
   /** Times `body` (which returns the number of packets it handled);
     * returns (packets, seconds, bytes allocated). */
@@ -122,6 +126,19 @@ final class Ladder(capture: File, packets: Int, fixtures: File, seed: Long, trac
     metrics("DisplayFilter.selectivity") = (kept.toDouble / records.length, "ratio")
   }
 
+  /** The `Wanted` a reader actually dissects with: its private pruning
+    * decision, read back instead of re-derived, so a change to the
+    * reader's pruning moves both sides of the row-build difference. */
+  private def wantedOf(r: PcapPartitionReader): Option[Dissect.Wanted] =
+    classOf[PcapPartitionReader].getDeclaredFields.filter(_.getType == classOf[Dissect.Wanted]) match {
+      case Array(f) =>
+        f.setAccessible(true)
+        Some(f.get(r).asInstanceOf[Dissect.Wanted])
+      case fs =>
+        failures += s"PcapPartitionReader has ${fs.length} Dissect.Wanted fields, expected one"
+        None
+    }
+
   /** The scan's partition reader, constructed directly over the same head
     * of the capture file, producing every column of `protocols`. Row-build
     * time is the reader's time minus framing and dissection measured
@@ -130,14 +147,16 @@ final class Ladder(capture: File, packets: Int, fixtures: File, seed: Long, trac
     val schema = Glossary.schemaFor(protocols)
     val names = schema.fieldNames
     val part = PcapInputPartition(capture.getAbsolutePath, records.length.toLong)
+    def open() = new PcapPartitionReader(part, schema, false, None, Array.empty)
     val (n, s, alloc) = timed("PcapPartitionReader", "next+get") {
-      val r = new PcapPartitionReader(part, schema, false, None, Array.empty)
+      val r = open()
       var k = 0L
       try while (r.next()) { r.get(); k += 1 } finally r.close()
       k
     }
-    val w = Dissect.Wanted(payloads = names.exists(_.contains("payload")),
-      info = names.contains("_ws.col.info"), infoBytes = names.contains("_ws.col.info"))
+    val probe = open()
+    val w = try wantedOf(probe).getOrElse(Dissect.WantAll) finally probe.close()
+    detail("PcapPartitionReader.wanted") = w.toString
     val (dn, ds, _) = timed("Dissect", "reader_wanted")(dissectAll(records, w, desegment = false))
     metrics("PcapPartitionReader.pkts_per_s") = (n / s, "pkt/s")
     metrics("PcapPartitionReader.rowbuild_ns_per_pkt") = ((s / n - ds / dn - framingSPerPkt) * 1e9, "ns/pkt")
@@ -145,16 +164,18 @@ final class Ladder(capture: File, packets: Int, fixtures: File, seed: Long, trac
     detail("PcapPartitionReader.columns") = names.length
   }
 
-  /** Split planning on every file the workload reads. */
-  def splitPlanning(files: Seq[File]): Unit = {
+  /** Split planning of the whole capture at `scan_full`'s split size,
+    * the plan that workload's scan runs. */
+  def splitPlanning(): Unit = {
     val conf = new Configuration()
     val runs = (1 to 3).map { _ =>
       val (n, s, _) = timed("PcapIndex", "splits")(
-        files.map(f => PcapIndex.splits(f.getAbsolutePath, 64L << 20, conf).size.toLong).sum)
+        PcapIndex.splits(capture.getAbsolutePath, Workload.SplitBytes, conf).size.toLong)
       (n, s)
     }
+    splits = runs.head._1
     metrics("PcapIndex.plan_s") = (Stats.median(runs.map(_._2)), "s")
-    metrics("PcapIndex.splits") = (runs.head._1.toDouble, "count")
+    metrics("PcapIndex.splits") = (splits.toDouble, "count")
   }
 
   /** The pcap writer on the head of the capture, cached first so only the

@@ -64,7 +64,7 @@ object Workload {
   /** Capture size, intra-file split size and ring-file size: the single
     * file scans as sixteen splits, the ring form as eight files. */
   val CaptureMiB = 64L
-  val Split = "4m"
+  val SplitBytes: Long = 4L << 20
   val RingBytes: Long = 8L << 20
 
   val all: Seq[Workload] = Seq(ScanFull, ScanTriage)
@@ -107,7 +107,7 @@ object ScanFull extends Workload {
   val scansPerPass = 1
 
   def scan(s: SparkSession, in: Inputs): DataFrame =
-    s.read.format("pcap").option("split", Workload.Split).option("protocols", Workload.Protocols)
+    s.read.format("pcap").option("split", Workload.SplitBytes.toString).option("protocols", Workload.Protocols)
       .load(in.single)
 
   val queries: Seq[Query] = Seq(

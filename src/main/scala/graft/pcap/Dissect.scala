@@ -138,24 +138,34 @@ object Dissect {
       * the outer value (the reference's stoll/stod prefix parse observes
       * the first occurrence of numeric fields). */
     var nested = false
+    /** Slots written since the last clear, in first-write order: a pooled
+      * vector resets only these, so the reset costs what the packet wrote,
+      * not the ~1,500-slot glossary. Grows on demand. */
+    private var dirty = new Array[Int](64)
+    private var nDirty = 0
 
     def clear(): Unit = {
-      java.util.Arrays.fill(objs, null)
-      java.util.Arrays.fill(kinds, 0.toByte)
+      var k = 0
+      while (k < nDirty) { val i = dirty(k); objs(i) = null; kinds(i) = 0; k += 1 }
+      nDirty = 0
+    }
+    /** Records slot `i`'s first write since the last clear. */
+    private def touch(i: Int): Unit = {
+      if (nDirty == dirty.length) dirty = java.util.Arrays.copyOf(dirty, nDirty * 2)
+      dirty(nDirty) = i; nDirty += 1
     }
 
-    def set(i: Int, value: Long): Unit = {
-      if (i < 0 || (nested && kinds(i) != 0)) return // outer occurrence wins
-      longs(i) = value; kinds(i) = 2
-    }
-    def set(i: Int, value: Boolean): Unit = {
-      if (i < 0 || (nested && kinds(i) != 0)) return
-      longs(i) = if (value) 1L else 0L; kinds(i) = 3
-    }
-    def set(i: Int, value: Double): Unit = {
-      if (i < 0 || (nested && kinds(i) != 0)) return
-      longs(i) = java.lang.Double.doubleToRawLongBits(value); kinds(i) = 4
-    }
+    /** Whether a primitive write to slot `i` lands: not when the slot is
+      * unknown, nor when nested and an outer occurrence already wrote it. */
+    private def writable(i: Int): Boolean =
+      i >= 0 && (if (kinds(i) == 0) { touch(i); true } else !nested)
+
+    def set(i: Int, value: Long): Unit =
+      if (writable(i)) { longs(i) = value; kinds(i) = 2 }
+    def set(i: Int, value: Boolean): Unit =
+      if (writable(i)) { longs(i) = if (value) 1L else 0L; kinds(i) = 3 }
+    def set(i: Int, value: Double): Unit =
+      if (writable(i)) { longs(i) = java.lang.Double.doubleToRawLongBits(value); kinds(i) = 4 }
     /** Object (string) store — also the landing spot for values that are
       * boxed already (generic code paths); those re-dispatch to the
       * primitive slots so consumers see one representation per kind. */
@@ -167,8 +177,10 @@ object Dissect {
         case d: java.lang.Double  => set(i, d.doubleValue)
         case x: java.lang.Integer => set(i, x.longValue)
         case _ =>
-          if (kinds(i) == 0 || !nested) { objs(i) = value; kinds(i) = 1 }
-          else (objs(i), value) match {
+          if (kinds(i) == 0 || !nested) {
+            if (kinds(i) == 0) touch(i)
+            objs(i) = value; kinds(i) = 1
+          } else (objs(i), value) match {
             case (p: String, s: String) => objs(i) = p + "," + s
             case _ => // numeric/bool outer occurrence wins
           }
@@ -294,14 +306,45 @@ object Dissect {
 
   // --- conversation state ------------------------------------------------
 
-  private final case class ConvKey(a: String, ap: Int, b: String, bp: Int)
+  /** A conversation's endpoint pair in canonical order: both addresses as
+    * 128-bit (hi, lo) words (IPv4 in `lo`), both ports and the IP version
+    * packed into `ports`. The tracker looks conversations up with one
+    * reused key and copies it only when a conversation starts. */
+  private final class ConvKey {
+    private var aHi, aLo, bHi, bLo, ports = 0L
 
-  private object ConvKey {
-    def canonical(srcIp: String, srcPort: Int, dstIp: String, dstPort: Int): (ConvKey, Boolean) = {
-      // direction-0 is the first-seen orientation; canonicalize by ordering
-      val fwd = (srcIp < dstIp) || (srcIp == dstIp && srcPort <= dstPort)
-      if (fwd) (ConvKey(srcIp, srcPort, dstIp, dstPort), true)
-      else (ConvKey(dstIp, dstPort, srcIp, srcPort), false)
+    /** Loads the pair from the IP header: `alen` is 4 or 16, and the
+      * destination address follows the source at `srcAt + alen`.
+      * @return true when the source is the canonical first endpoint
+      *   (direction 0) */
+    def set(ip: Array[Byte], srcAt: Int, alen: Int, sp: Int, dp: Int): Boolean = {
+      val v6 = alen == 16
+      val sHi = if (v6) u64(ip, srcAt) else 0L
+      val sLo = if (v6) u64(ip, srcAt + 8) else u32(ip, srcAt)
+      val dHi = if (v6) u64(ip, srcAt + 16) else 0L
+      val dLo = if (v6) u64(ip, srcAt + 24) else u32(ip, srcAt + 4)
+      val c =
+        if (sHi != dHi) java.lang.Long.compareUnsigned(sHi, dHi)
+        else java.lang.Long.compareUnsigned(sLo, dLo)
+      val fwd = c < 0 || (c == 0 && sp <= dp)
+      if (fwd) { aHi = sHi; aLo = sLo; bHi = dHi; bLo = dLo; ports = (sp.toLong << 16) | dp }
+      else { aHi = dHi; aLo = dLo; bHi = sHi; bLo = sLo; ports = (dp.toLong << 16) | sp }
+      if (v6) ports |= 1L << 32
+      fwd
+    }
+    def copy(): ConvKey = {
+      val k = new ConvKey
+      k.aHi = aHi; k.aLo = aLo; k.bHi = bHi; k.bLo = bLo; k.ports = ports
+      k
+    }
+    override def hashCode: Int = {
+      val h = (((aHi * 31 + aLo) * 31 + bHi) * 31 + bLo) * 31 + ports
+      (h ^ (h >>> 32)).toInt
+    }
+    override def equals(o: Any): Boolean = o match {
+      case k: ConvKey =>
+        aLo == k.aLo && bLo == k.bLo && ports == k.ports && aHi == k.aHi && bHi == k.bHi
+      case _ => false
     }
   }
 
@@ -491,8 +534,10 @@ object Dissect {
       if (reuseBuffers) mutable.ArrayBuffer.empty[String] else null
     private[Dissect] val chains = new ChainCache
     private[Dissect] lazy val infoBuf = new InfoBuf
-    private val tcpConvs = mutable.HashMap.empty[ConvKey, TcpConv]
-    private val udpConvs = mutable.HashMap.empty[ConvKey, UdpConv]
+    private val tcpConvs = new java.util.HashMap[ConvKey, TcpConv]
+    private val udpConvs = new java.util.HashMap[ConvKey, UdpConv]
+    /** The lookup key, reloaded per packet by the TCP/UDP dissectors. */
+    private[Dissect] val probe = new ConvKey
     private var nextTcpStream = 0L
     private var nextUdpStream = 0L
     private[Dissect] var firstPacketMicros = -1L
@@ -518,10 +563,16 @@ object Dissect {
     private[Dissect] def btRegisterCid(cid: Int, psm: Int): Unit =
       if (btCidPsm.size < 256) btCidPsm(cid) = psm
 
-    private[Dissect] def tcpConv(k: ConvKey): TcpConv =
-      tcpConvs.getOrElseUpdate(k, { val c = new TcpConv(nextTcpStream); nextTcpStream += 1; c })
-    private[Dissect] def udpConv(k: ConvKey): UdpConv =
-      udpConvs.getOrElseUpdate(k, { val c = new UdpConv(nextUdpStream); nextUdpStream += 1; c })
+    private[Dissect] def tcpConv(k: ConvKey): TcpConv = {
+      var c = tcpConvs.get(k)
+      if (c == null) { c = new TcpConv(nextTcpStream); nextTcpStream += 1; tcpConvs.put(k.copy(), c) }
+      c
+    }
+    private[Dissect] def udpConv(k: ConvKey): UdpConv = {
+      var c = udpConvs.get(k)
+      if (c == null) { c = new UdpConv(nextUdpStream); nextUdpStream += 1; udpConvs.put(k.copy(), c) }
+      c
+    }
 
     // IP fragment reassembly (desegment only): pending datagrams keyed by
     // (version, src, dst, id), insertion-order bounded so a capture full of
@@ -553,6 +604,7 @@ object Dissect {
   private def u32(d: Array[Byte], o: Int): Long =
     (((d(o) & 0xff).toLong << 24) | ((d(o + 1) & 0xff) << 16) |
       ((d(o + 2) & 0xff) << 8) | (d(o + 3) & 0xff)) & 0xffffffffL
+  private def u64(d: Array[Byte], o: Int): Long = (u32(d, o) << 32) | u32(d, o + 4)
 
   /** Two-hex-digit strings for 0..255 — String.format per byte costs more
     * than the rest of a packet's dissection combined on the hot path. */
@@ -1493,29 +1545,26 @@ object Dissect {
     if ((flags & 0xc000) != 0) p += 4 // checksum + reserved (C or R set)
     if ((flags & 0x2000) != 0) p += 4 // key
     if ((flags & 0x1000) != 0) p += 4 // sequence number
-    val wasNested = v.nested
-    v.nested = true
-    val inner =
-      try proto match {
-        case 0x0800 => dissectIpv4(d, p, v, protos, tracker, wanted)
-        case 0x86dd => dissectIpv6(d, p, v, protos, tracker, wanted)
-        case 0x6558 => dissectEthFrom(d, p, v, protos, tracker, wanted) // transparent bridging
-        case 0x88be if end >= p + 8 =>
-          // ERSPAN Type II (Cisco): 8-byte header — ver(4)+vlan(12),
-          // cos/en/t + session id(10), reserved+index — then the
-          // mirrored Ethernet frame. (Type I — no header — is signalled
-          // by the GRE sequence bit being absent; tshark still inserts
-          // the erspan layer, with no fields.)
-          protos += "erspan"
-          val innerOff = if ((flags & 0x1000) != 0) {
-            v("erspan.version") = ((u8(d, p) >> 4) & 0xf).toLong
-            v("erspan.spanid") = (u16(d, p + 2) & 0x3ff).toLong
-            p + 8
-          } else p
-          dissectEthFrom(d, innerOff, v, protos, tracker, wanted)
-        case 0x2001 => dissectNhrp(d, p, end, v, protos)
-        case _      => null
-      } finally v.nested = wasNested
+    val inner = nestedIn(v)(proto match {
+      case 0x0800 => dissectIpv4(d, p, v, protos, tracker, wanted)
+      case 0x86dd => dissectIpv6(d, p, v, protos, tracker, wanted)
+      case 0x6558 => dissectEthFrom(d, p, v, protos, tracker, wanted) // transparent bridging
+      case 0x88be if end >= p + 8 =>
+        // ERSPAN Type II (Cisco): 8-byte header — ver(4)+vlan(12),
+        // cos/en/t + session id(10), reserved+index — then the
+        // mirrored Ethernet frame. (Type I — no header — is signalled
+        // by the GRE sequence bit being absent; tshark still inserts
+        // the erspan layer, with no fields.)
+        protos += "erspan"
+        val innerOff = if ((flags & 0x1000) != 0) {
+          v("erspan.version") = ((u8(d, p) >> 4) & 0xf).toLong
+          v("erspan.spanid") = (u16(d, p + 2) & 0x3ff).toLong
+          p + 8
+        } else p
+        dissectEthFrom(d, innerOff, v, protos, tracker, wanted)
+      case 0x2001 => dissectNhrp(d, p, end, v, protos)
+      case _      => null
+    })
     if (inner != null) inner
     else s"Generic Routing Encapsulation (0x${"%04x".format(proto)})"
   }
@@ -1609,8 +1658,8 @@ object Dissect {
         tracker.addFrag(4, src, dst, id, fragOffset * 8, part, last = !mf, proto) match {
           case (reasm, p) =>
             return p match {
-              case 6  => dissectTcp(reasm, 0, reasm.length, src, dst, v, protos, tracker, wanted)
-              case 17 => dissectUdp(reasm, 0, reasm.length, src, dst, v, protos, tracker, wanted)
+              case 6  => dissectTcp(reasm, 0, reasm.length, d, off + 12, 4, v, protos, tracker, wanted)
+              case 17 => dissectUdp(reasm, 0, reasm.length, d, off + 12, 4, v, protos, tracker, wanted)
               case 1  => protos += "icmp"; dissectIcmp(reasm, 0, v)
               case _  => null
             }
@@ -1620,8 +1669,8 @@ object Dissect {
       return s"Fragmented IP protocol (proto=$proto, off=${fragOffset * 8}, ID=${"%04x".format(u16(d, off + 4))})"
     }
     proto match {
-      case 6  => dissectTcp(d, next, ipEnd, src, dst, v, protos, tracker, wanted)
-      case 17 => dissectUdp(d, next, ipEnd, src, dst, v, protos, tracker, wanted)
+      case 6  => dissectTcp(d, next, ipEnd, d, off + 12, 4, v, protos, tracker, wanted)
+      case 17 => dissectUdp(d, next, ipEnd, d, off + 12, 4, v, protos, tracker, wanted)
       case 1  => protos += "icmp"; dissectIcmp(d, next, v)
       case 2  => protos += "igmp"; dissectIgmp(d, next, ipEnd, v, protos)
       case 47 => dissectGre(d, next, ipEnd, v, protos, tracker, wanted)
@@ -1630,7 +1679,7 @@ object Dissect {
       case 46 => dissectRsvp(d, next, ipEnd, v, protos)
       case 103 => dissectPim(d, next, ipEnd, v, protos)
       case 115 => dissectL2tpv3(d, next, ipEnd, v, protos)
-      case 51 => dissectAh(d, next, ipEnd, src, dst, v, protos, tracker, wanted)
+      case 51 => dissectAh(d, next, ipEnd, d, off + 12, 4, v, protos, tracker, wanted)
       case 88  => dissectEigrp(d, next, ipEnd, v, protos)
       case 89  => protos += "ospf"; dissectOspf(d, next, ipEnd, v)
       case 112 => dissectVrrp(d, next, ipEnd, v, protos)
@@ -1768,8 +1817,8 @@ object Dissect {
           if (fragOffB == 0) nxtH else -1) match {
           case (reasm, up) =>
             return up match {
-              case 6  => dissectTcp(reasm, 0, reasm.length, src, dst, v, protos, tracker, wanted)
-              case 17 => dissectUdp(reasm, 0, reasm.length, src, dst, v, protos, tracker, wanted)
+              case 6  => dissectTcp(reasm, 0, reasm.length, d, off + 8, 16, v, protos, tracker, wanted)
+              case 17 => dissectUdp(reasm, 0, reasm.length, d, off + 8, 16, v, protos, tracker, wanted)
               case 58 => protos += "icmpv6"; dissectIcmpv6(reasm, 0, reasm.length, v)
               case _  => null
             }
@@ -1779,8 +1828,8 @@ object Dissect {
       return s"IPv6 fragment (nxt=$nxtH, off=$fragOffB, id=0x${"%08x".format(fragId)})"
     }
     nxtH match {
-      case 6  => dissectTcp(d, p, end, src, dst, v, protos, tracker, wanted)
-      case 17 => dissectUdp(d, p, end, src, dst, v, protos, tracker, wanted)
+      case 6  => dissectTcp(d, p, end, d, off + 8, 16, v, protos, tracker, wanted)
+      case 17 => dissectUdp(d, p, end, d, off + 8, 16, v, protos, tracker, wanted)
       case 58 => protos += "icmpv6"; dissectIcmpv6(d, p, end, v)
       case 47 => dissectGre(d, p, end, v, protos, tracker, wanted)
       case 50 => protos += "esp"; dissectEsp(d, p, end, v)
@@ -1788,7 +1837,7 @@ object Dissect {
       case 46 => dissectRsvp(d, p, end, v, protos)
       case 103 => dissectPim(d, p, end, v, protos)
       case 115 => dissectL2tpv3(d, p, end, v, protos)
-      case 51 => dissectAh(d, p, end, src, dst, v, protos, tracker, wanted)
+      case 51 => dissectAh(d, p, end, d, off + 8, 16, v, protos, tracker, wanted)
       case 89  => protos += "ospf"; dissectOspf(d, p, end, v)
       case 132 => dissectSctp(d, p, end, v, protos)
       case 33  => dissectDccp(d, p, end, v, protos)
@@ -1860,9 +1909,78 @@ object Dissect {
     s"NTP Version $vn, ${ntpModes(mode)}"
   }
 
+  // --- port dispatch -----------------------------------------------------
+
+  /** One application payload offered to the TCP/UDP dissector tables:
+    * bytes `b(o until o + n)` (bounded by the capture and, for UDP, by the
+    * declared length `plen`), the ports, the conversation and the
+    * per-packet sinks. TCP segments carry `tcp` and its direction `dir`,
+    * UDP datagrams `udp`. */
+  private final class Seg(
+      val b: Array[Byte], val o: Int, val n: Int, val plen: Int,
+      val sp: Int, val dp: Int,
+      val tcp: TcpConv, val dir: Int, val udp: UdpConv,
+      val v: FieldVec, val p: mutable.ArrayBuffer[String],
+      val t: Tracker, val w: Wanted) {
+    def end: Int = o + n
+  }
+
+  /** A dissector registered on `ports` (none: a heuristic tried on every
+    * port). It returns the info column, or null to pass the payload on. */
+  private final class PortDissector(val ports: Seq[Int], val run: Seg => String)
+  private def on(ports: Int*)(run: Seg => String): PortDissector = new PortDissector(ports, run)
+
+  /** Returned by a dissector that owns the payload but renders no info of
+    * its own: dispatch stops and the transport's own info line is used. */
+  private val Claimed: String = new String("claimed-sentinel")
+
+  /** Port → dissector table, like Wireshark's `dissector_add_uint("tcp.port",
+    * …)` with its heuristic list: the dissectors' order here is their try
+    * order. A payload tries the dissectors of its source and destination
+    * ports and the heuristics, merged in that order (a dissector on both
+    * ports runs once), until one returns info. */
+  private final class PortTable(dissectors: PortDissector*) {
+    private val all = dissectors.toArray
+    // what a port tries: indexes into `all`, ascending; `tries(i)` is for
+    // `ports(i)`, and a port with no dissector of its own tries `anyPort`
+    private val anyPort: Array[Int] = all.indices.filter(all(_).ports.isEmpty).toArray
+    private val ports: Array[Int] = all.flatMap(_.ports).distinct.sorted
+    private val tries: Array[Array[Int]] =
+      ports.map(port => (anyPort ++ all.indices.filter(all(_).ports.contains(port))).sorted)
+    private def tried(port: Int): Array[Int] = {
+      val i = java.util.Arrays.binarySearch(ports, port)
+      if (i >= 0) tries(i) else anyPort
+    }
+
+    def dispatch(s: Seg): String = {
+      val a = tried(s.sp)
+      val b = tried(s.dp)
+      var i = 0
+      var j = 0
+      while (i < a.length || j < b.length) {
+        val k =
+          if (j == b.length || (i < a.length && a(i) <= b(j))) {
+            if (j < b.length && a(i) == b(j)) j += 1
+            i += 1
+            a(i - 1)
+          } else { j += 1; b(j - 1) }
+        val info = all(k).run(s)
+        if (info != null) return info
+      }
+      null
+    }
+  }
+
+  /** Runs a tunnelled inner dissection in multi-occurrence field mode. */
+  private def nestedIn(v: FieldVec)(inner: => String): String = {
+    val was = v.nested
+    v.nested = true
+    try inner finally v.nested = was
+  }
+
   private def dissectTcp(
       d: Array[Byte], off: Int, ipEnd: Int,
-      srcIp: String, dstIp: String,
+      ip: Array[Byte], srcAt: Int, alen: Int,
       v: FieldVec,
       protos: mutable.ArrayBuffer[String],
       tracker: Tracker,
@@ -1885,8 +2003,8 @@ object Dissect {
     val ack = (flags & 0x10) != 0
     val urg = (flags & 0x20) != 0
 
-    val (key, isFwd) = ConvKey.canonical(srcIp, sp, dstIp, dp)
-    val conv = tracker.tcpConv(key)
+    val isFwd = tracker.probe.set(ip, srcAt, alen, sp, dp)
+    val conv = tracker.tcpConv(tracker.probe)
     val dir = if (isFwd) 0 else 1
     if (conv.isn(dir) < 0) conv.isn(dir) = rawSeq
     if (syn) conv.sawSyn(dir) = true
@@ -2133,644 +2251,12 @@ object Dissect {
     }
     if (outOfOrder) v.set(Id_tcp_analysis_out_of_order, "1")
 
-    // application layer: FIX (with optional desegmentation), HTTP, TLS
+    // application layer: the TCP dissector table, in order
     var appInfo: String = null
     if (appLen > 0) {
-      val startsFix = appLen > 5 &&
-        appBuf(appOff) == '8' && appBuf(appOff + 1) == '=' && appBuf(appOff + 2) == 'F' &&
-        appBuf(appOff + 3) == 'I' && appBuf(appOff + 4) == 'X'
-      // an active HTTP carry owns the stream: a payload that happens to
-      // start with "8=FIX" mid-headers must not clobber it
-      if (tracker.desegment && conv.carryKind(dir) != 2 &&
-        (startsFix || (conv.carryKind(dir) == 1 && conv.carry(dir).nonEmpty))) {
-        // FIX reassembly: prepend this direction's carried tail, extract the
-        // messages COMPLETED by this segment, keep the new tail
-        val prev = conv.carry(dir)
-        val buf =
-          if (prev.isEmpty) java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          else prev ++ java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-        val (msgs, consumed) = fixCompleteMessages(buf)
-        conv.carry(dir) =
-          if (buf.length - consumed > MaxCarry) Array.emptyByteArray
-          else java.util.Arrays.copyOfRange(buf, consumed, buf.length)
-        conv.carryKind(dir) = if (conv.carry(dir).nonEmpty) 1 else 0
-        if (msgs.nonEmpty) {
-          protos += "fix"
-          appInfo = msgs.mkString(", ")
-          v("fix.msgtype") = msgs.head
-        } else if (conv.carry(dir).nonEmpty) {
-          // mid-PDU segment: tshark-style continuation marker, no fix layer
-          appInfo = "[TCP segment of a reassembled PDU]"
-        }
-      } else if (startsFix) {
-        protos += "fix"
-        val msgs = fixMessages(appBuf, appOff, appLen,
-          if (wanted.info) Int.MaxValue else 1)
-        if (msgs.nonEmpty) {
-          // single-message segments (the overwhelming majority) reuse the
-          // cached name string — no mkString StringBuilder per row
-          if (wanted.info)
-            appInfo = if (msgs.length == 1) msgs.head else msgs.mkString(", ")
-          else appInfo = ""
-          v("fix.msgtype") = msgs.head
-        }
-      }
-      // HTTP/2: the 24-byte client connection preface marks the
-      // conversation; afterwards both directions sniff h2 frame headers
-      // (not HTTP/1 heuristics — h2 HEADERS are HPACK, not text). An
-      // h2-marked conversation OWNS its segments: a continuation that
-      // doesn't start on a frame boundary must fall back to the plain TCP
-      // rendering, never to the HTTP/1/TLS/DNS content heuristics (HPACK
-      // bytes would false-positive them).
-      var h2Claimed = false
-      if (appInfo == null) {
-        // any kind-8 carry joins the segment up front, so a preface or
-        // frame split across segments completes here
-        val h2CarryPending = tracker.desegment &&
-          conv.carryKind(dir) == 8 && conv.carry(dir).nonEmpty
-        val hbuf =
-          if (h2CarryPending)
-            conv.carry(dir) ++ java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          else appBuf
-        val hoff = if (h2CarryPending) 0 else appOff
-        val hlen = if (h2CarryPending) hbuf.length else appLen
-        val isPreface = isH2Preface(hbuf, hoff, hlen)
-        if (isPreface) conv.http2 = true
-        if (conv.http2) {
-          h2Claimed = true
-          if (tracker.desegment) {
-            // frame-boundary reassembly (carry kind 8): every frame
-            // COMPLETED by this run dissects; an incomplete trailing
-            // frame (or header) carries to the completing segment —
-            // the same shape as the ws/MQTT desegment paths.
-            val consumed = h2Consumed(hbuf, hoff, hlen, isPreface)
-            if (consumed < 0) {
-              // not frame-aligned (mid-frame continuation of a run we
-              // never saw the start of): plain TCP rendering, no carry
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-              appInfo = dissectHttp2(hbuf, hoff, hlen, isPreface, conv, v, protos, dir)
-            } else {
-              if (consumed > 0)
-                appInfo = dissectHttp2(hbuf, hoff, consumed, isPreface, conv, v, protos, dir)
-              val rest = hlen - consumed
-              if (rest > 0 && rest <= MaxCarry &&
-                  h2TailPlausible(hbuf, hoff + consumed, hoff + hlen)) {
-                conv.carry(dir) =
-                  java.util.Arrays.copyOfRange(hbuf, hoff + consumed, hoff + hlen)
-                conv.carryKind(dir) = 8
-                if (appInfo == null) appInfo = "[TCP segment of a reassembled PDU]"
-              } else if (conv.carryKind(dir) == 8) {
-                conv.carry(dir) = Array.emptyByteArray
-                conv.carryKind(dir) = 0
-              }
-            }
-          } else {
-            appInfo = dissectHttp2(appBuf, appOff, appLen, isPreface, conv, v, protos, dir)
-          }
-        } else if (tracker.desegment && hlen < h2Preface.length &&
-            isH2PrefacePrefix(hbuf, hoff, hlen) && hlen <= MaxCarry) {
-          // a strict prefix of the client preface: carry (kind 8) and
-          // wait — nothing else can start with these bytes
-          conv.carry(dir) = java.util.Arrays.copyOfRange(hbuf, hoff, hoff + hlen)
-          conv.carryKind(dir) = 8
-          h2Claimed = true
-          appInfo = "[TCP segment of a reassembled PDU]"
-        } else if (h2CarryPending) {
-          // carried bytes turned out not to be h2 after all
-          conv.carry(dir) = Array.emptyByteArray
-          conv.carryKind(dir) = 0
-        }
-      }
-      // HTTP reassembly: buffer until the header block terminator arrives
-      if (appInfo == null && !h2Claimed && tracker.desegment) {
-        val httpCarry = conv.carryKind(dir) == 2 && conv.carry(dir).nonEmpty
-        val head = new String(appBuf, appOff, math.min(appLen, 10), "ISO-8859-1")
-        val looksHttpStart = head.startsWith("HTTP/1.") || httpMethods.exists(head.startsWith)
-        if (httpCarry || looksHttpStart) {
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (httpCarry) conv.carry(dir) ++ seg else seg
-          val hEnd = indexOfCrlfCrlf(buf)
-          if (hEnd >= 0) {
-            // chunked transfer coding: keep carrying past the header block
-            // until the terminal 0-chunk arrives, then decode the body
-            // (tshark reports the message on its final segment); bytes past
-            // the terminal chunk (a pipelined next message) are dropped
-            val chunked = isChunkedHeaders(buf, hEnd + 4)
-            val body = if (chunked) decodeChunked(buf, hEnd + 4) else null
-            if (chunked && body == null && buf.length <= MaxCarry) {
-              conv.carry(dir) = buf
-              conv.carryKind(dir) = 2
-              appInfo = "[TCP segment of a reassembled PDU]"
-            } else {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-              appInfo = dissectHttp(buf, 0, buf.length, v, protos)
-              if (body != null && appInfo != null) {
-                v("http.transfer_encoding") = "chunked"
-                // gzip entity coding: file_data carries the DECOMPRESSED
-                // body (tshark semantics); undecodable gzip keeps the raw
-                val hdrs = new String(buf, 0, hEnd, "ISO-8859-1")
-                  .toLowerCase(java.util.Locale.ROOT).replace(" ", "")
-                val dec = if (hdrs.contains("content-encoding:gzip"))
-                  gunzipBody(body) else null
-                if (dec != null) v("http.content_encoding") = "gzip"
-                v("http.file_data") = if (dec != null) dec else body
-              }
-              // the upgrade flip must also happen on the desegment path,
-              // or a 101 seen here would leave ws frames undissected
-              if (appInfo != null && appInfo.startsWith("HTTP/1.1 101")) {
-                val txt = new String(buf, 0, math.min(buf.length, 1024),
-                  "ISO-8859-1").toLowerCase(java.util.Locale.ROOT)
-                if (txt.contains("upgrade: websocket")) conv.wsUpgraded = true
-              }
-            }
-          } else if (buf.length <= MaxCarry) {
-            conv.carry(dir) = buf
-            conv.carryKind(dir) = 2
-            appInfo = "[TCP segment of a reassembled PDU]"
-          } else {
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-          }
-        }
-      }
-      // a completed websocket upgrade owns the conversation's bytes from
-      // the segment AFTER the 101 (the 101 itself still renders as HTTP)
-      // WebSocket framing is self-describing (header + declared payload
-      // length), so under desegment a frame spanning TCP segments carries
-      // (kind 7) until complete, then dissects — and unmasks — on the
-      // completing segment, tshark reassembly semantics. Without
-      // desegment only the header's fields surface (no payload text).
-      if (appInfo == null && !h2Claimed && conv.wsUpgraded) {
-        if (tracker.desegment) {
-          // Like the MQTT multi-PDU path: every frame COMPLETED by this
-          // run dissects, and only the trailing partial frame carries
-          // (kind 7) to the completing segment.
-          val wsCarry = conv.carryKind(dir) == 7 && conv.carry(dir).nonEmpty
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (wsCarry) conv.carry(dir) ++ seg else seg
-          val infos = mutable.ArrayBuffer.empty[String]
-          var i = 0
-          var lastNeed = 0L
-          var stop = false
-          var bad = false
-          while (!stop) {
-            lastNeed = wsFrameLen(buf, i, buf.length - i)
-            if (lastNeed > 0 && buf.length - i >= lastNeed) {
-              val r = dissectWebsocket(buf, i, lastNeed.toInt, v, protos)
-              if (r == null) { stop = true; bad = infos.isEmpty && !wsCarry }
-              else { infos += r; i += lastNeed.toInt }
-            } else if (lastNeed == 0) {
-              stop = true; bad = infos.isEmpty && !wsCarry
-            } else {
-              stop = true // incomplete header or partial frame: wait
-            }
-          }
-          if (!bad) {
-            val rest = buf.length - i
-            if (rest > 0 && rest <= MaxCarry && lastNeed != 0) {
-              conv.carry(dir) = java.util.Arrays.copyOfRange(buf, i, buf.length)
-              conv.carryKind(dir) = 7
-            } else if (conv.carryKind(dir) == 7) {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-            }
-            if (infos.nonEmpty) {
-              // One "websocket" layer appended per frame; collapse only
-              // the trailing run (as the MQTT loop does).
-              while (protos.length >= 2 && protos.last == "websocket" &&
-                     protos(protos.length - 2) == "websocket")
-                protos.remove(protos.length - 1)
-              appInfo = infos.mkString(", ")
-            } else if (conv.carryKind(dir) == 7 && conv.carry(dir).nonEmpty) {
-              appInfo = "[TCP segment of a reassembled PDU]"
-            }
-          } else {
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-            appInfo = dissectWebsocket(appBuf, appOff, appLen, v, protos)
-          }
-        } else {
-          appInfo = dissectWebsocket(appBuf, appOff, appLen, v, protos)
-        }
-      }
-      if (appInfo == null && !h2Claimed) {
-        appInfo = dissectHttp(appBuf, appOff, appLen, v, protos)
-        if (appInfo != null && appInfo.startsWith("HTTP/1.1 101")) {
-          val txt = new String(appBuf, appOff, math.min(appLen, 1024),
-            "ISO-8859-1").toLowerCase(java.util.Locale.ROOT)
-          if (txt.contains("upgrade: websocket")) conv.wsUpgraded = true
-        }
-      }
-      if (appInfo == null && !h2Claimed) {
-        appInfo = dissectTls(appBuf, appOff, appLen, sp, dp, v, protos)
-        // DNS-over-TLS (RFC 7858): TLS on registered port 853 — payload
-        // stays encrypted; the transport marker is what analytics can see
-        if (appInfo != null && (sp == 853 || dp == 853))
-          appInfo += " (DNS-over-TLS)"
-      }
-      if (appInfo == null && !h2Claimed &&
-          (sp == 445 || dp == 445 || sp == 139 || dp == 139))
-        appInfo = dissectNbssSmb(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3389 || dp == 3389))
-        appInfo = dissectRdp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3868 || dp == 3868))
-        appInfo = dissectDiameter(appBuf, appOff, appOff + appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 554 || dp == 554))
-        appInfo = dissectRtsp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 135 || dp == 135))
-        appInfo = dissectDcerpc(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1080 || dp == 1080))
-        appInfo = dissectSocks(appBuf, appOff, appLen, fromServer = sp == 1080, v, protos)
-      // FTP: line-oriented — under desegment an incomplete trailing line
-      // carries across delivered runs (kind 4) and dissects on the run
-      // that completes its CRLF (tshark reassembly semantics); without
-      // desegment only whole-in-segment lines dissect.
-      if (appInfo == null && !h2Claimed && (sp == 21 || dp == 21) && appLen > 0) {
-        if (tracker.desegment) {
-          val ftpCarry = conv.carryKind(dir) == 4 && conv.carry(dir).nonEmpty
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (ftpCarry) conv.carry(dir) ++ seg else seg
-          var lastCrlf = -1
-          var i = buf.length - 2
-          while (lastCrlf < 0 && i >= 0) {
-            if (buf(i) == '\r' && buf(i + 1) == '\n') lastCrlf = i
-            i -= 1
-          }
-          if (lastCrlf >= 0)
-            appInfo = dissectFtp(buf, 0, lastCrlf + 2, fromServer = sp == 21, v, protos)
-          val restLen = buf.length - (if (lastCrlf >= 0) lastCrlf + 2 else 0)
-          if (restLen > 0 && restLen <= MaxCarry && (appInfo != null || ftpCarry ||
-            looksFtpStart(buf, fromServer = sp == 21))) {
-            conv.carry(dir) = java.util.Arrays.copyOfRange(buf, buf.length - restLen, buf.length)
-            conv.carryKind(dir) = 4
-            if (appInfo == null) appInfo = "[TCP segment of a reassembled PDU]"
-          } else if (conv.carryKind(dir) == 4) {
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-          }
-        } else {
-          appInfo = dissectFtp(appBuf, appOff, appLen, fromServer = sp == 21, v, protos)
-        }
-      }
-      if (appInfo == null && !h2Claimed && (sp == 22 || dp == 22))
-        appInfo = dissectSsh(appBuf, appOff, appLen, fromServer = sp == 22, v, protos)
-      // SIP over TCP (RFC 3261 §18.3): the message length is the header
-      // block plus Content-Length, so under desegment a message spanning
-      // segments carries (kind 5) until headers + body are complete and
-      // dissects on the completing segment — identical fields/RTP-port
-      // registration to the whole-in-segment case. Bytes past the message
-      // (a pipelined next one) are dropped, the HTTP-path simplification.
-      if (appInfo == null && !h2Claimed && (sp == 5060 || dp == 5060) && appLen > 0) {
-        if (tracker.desegment) {
-          val sipCarry = conv.carryKind(dir) == 5 && conv.carry(dir).nonEmpty
-          val head = new String(appBuf, appOff, math.min(appLen, 12), "ISO-8859-1")
-          val looksSipStart = head.startsWith("SIP/2.0 ") ||
-            sipMethods.exists(m => head.startsWith(m + " "))
-          if (sipCarry || looksSipStart) {
-            val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-            val buf = if (sipCarry) conv.carry(dir) ++ seg else seg
-            val hEnd = indexOfCrlfCrlf(buf)
-            val want = if (hEnd < 0) -1 else hEnd + 4 + sipContentLength(buf, hEnd + 4)
-            if (hEnd >= 0 && want >= 0 && buf.length >= want) {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-              appInfo = dissectSip(buf, 0, want, v, protos, tracker)
-            } else if (buf.length <= MaxCarry) {
-              conv.carry(dir) = buf
-              conv.carryKind(dir) = 5
-              appInfo = "[TCP segment of a reassembled PDU]"
-            } else {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-            }
-          }
-        } else {
-          appInfo = dissectSip(appBuf, appOff, appLen, v, protos, tracker)
-        }
-      }
-      if (appInfo == null && !h2Claimed && (sp == 88 || dp == 88))
-        appInfo = dissectKrb5(appBuf, appOff, appLen, overTcp = true, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2049 || dp == 2049))
-        appInfo = dissectRpcNfs(appBuf, appOff, appLen, overTcp = true, v, protos, tracker)
-      if (appInfo == null && !h2Claimed && (sp == 389 || dp == 389))
-        appInfo = dissectLdap(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 502 || dp == 502))
-        appInfo = dissectModbus(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 102 || dp == 102))
-        appInfo = dissectS7(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 102 || dp == 102))
-        appInfo = dissectMms(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 20000 || dp == 20000))
-        appInfo = dissectDnp3(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2404 || dp == 2404))
-        appInfo = dissectIec104(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 44818 || dp == 44818))
-        appInfo = dissectEnip(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4840 || dp == 4840))
-        appInfo = dissectOpcua(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6667 || dp == 6667))
-        appInfo = dissectIrc(appBuf, appOff, appLen, fromServer = sp == 6667, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5222 || dp == 5222))
-        appInfo = dissectXmpp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2775 || dp == 2775))
-        appInfo = dissectSmpp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1723 || dp == 1723))
-        appInfo = dissectPptp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 49 || dp == 49))
-        appInfo = dissectTacplus(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 23 || dp == 23))
-        appInfo = dissectTelnet(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 25 || dp == 25 || sp == 587 || dp == 587))
-        appInfo = dissectSmtp(appBuf, appOff, appLen, fromServer = sp == 25 || sp == 587, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 110 || dp == 110))
-        appInfo = dissectPop(appBuf, appOff, appLen, fromServer = sp == 110, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 143 || dp == 143))
-        appInfo = dissectImap(appBuf, appOff, appLen, fromServer = sp == 143, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 179 || dp == 179))
-        appInfo = dissectBgp(appBuf, appOff, appLen, v, protos)
-      // MQTT framing is the fixed header's varint length, so under
-      // desegment every PDU COMPLETED by this run dissects (multi-PDU
-      // segments list each message, tshark-style) and a trailing partial
-      // PDU carries (kind 6) to the completing segment.
-      if (appInfo == null && !h2Claimed && (sp == 1883 || dp == 1883) && appLen > 0) {
-        if (tracker.desegment) {
-          val mqCarry = conv.carryKind(dir) == 6 && conv.carry(dir).nonEmpty
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (mqCarry) conv.carry(dir) ++ seg else seg
-          val infos = mutable.ArrayBuffer.empty[String]
-          var i = 0
-          var bad = false
-          var stop = false
-          while (!stop) {
-            mqttPduLen(buf, i, buf.length) match {
-              case -2 => stop = true; bad = i == 0 && !mqCarry
-              case -1 => stop = true
-              case n =>
-                val r = dissectMqtt(buf, i, n, v, protos)
-                if (r == null) { stop = true; bad = infos.isEmpty && !mqCarry }
-                else { infos += r; i += n }
-            }
-          }
-          if (!bad) {
-            val rest = buf.length - i
-            if (rest > 0 && rest <= MaxCarry && mqttPduLen(buf, i, buf.length) == -1) {
-              conv.carry(dir) = java.util.Arrays.copyOfRange(buf, i, buf.length)
-              conv.carryKind(dir) = 6
-            } else if (conv.carryKind(dir) == 6) {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-            }
-            if (infos.nonEmpty) {
-              // The multi-PDU loop appended one "mqtt" per PDU; collapse
-              // only that trailing run (Wireshark keeps legitimately
-              // repeated layers elsewhere in the chain, e.g. ip:gre:ip).
-              while (protos.length >= 2 && protos.last == "mqtt" &&
-                     protos(protos.length - 2) == "mqtt")
-                protos.remove(protos.length - 1)
-              appInfo = infos.mkString(", ")
-            } else if (conv.carryKind(dir) == 6 && conv.carry(dir).nonEmpty) {
-              appInfo = "[TCP segment of a reassembled PDU]"
-            }
-          } else if (conv.carryKind(dir) == 6) {
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-          }
-        } else {
-          appInfo = dissectMqtt(appBuf, appOff, appLen, v, protos)
-        }
-      }
-      if (appInfo == null && !h2Claimed && (sp == 1433 || dp == 1433))
-        appInfo = dissectTds(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5672 || dp == 5672))
-        appInfo = dissectAmqp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5432 || dp == 5432))
-        appInfo = dissectPgsql(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3306 || dp == 3306))
-        appInfo = dissectMysql(appBuf, appOff, appLen, fromServer = sp == 3306, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6379 || dp == 6379))
-        appInfo = dissectRedis(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9092 || dp == 9092))
-        appInfo = dissectKafka(appBuf, appOff, appLen, fromServer = sp == 9092,
-          conv, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9042 || dp == 9042))
-        appInfo = dissectCql(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 11211 || dp == 11211))
-        appInfo = dissectMemcache(appBuf, appOff, appLen, fromServer = sp == 11211, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 27017 || dp == 27017))
-        appInfo = dissectMongo(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 873 || dp == 873))
-        appInfo = dissectRsync(appBuf, appOff, appLen, fromServer = sp == 873,
-          conv, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4730 || dp == 4730))
-        appInfo = dissectGearman(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 8009 || dp == 8009))
-        appInfo = dissectAjp13(appBuf, appOff, appLen, fromServer = sp == 8009, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 8333 || dp == 8333))
-        appInfo = dissectBitcoin(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9000 || dp == 9000))
-        appInfo = dissectFcgi(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && dp == 4369)
-        appInfo = dissectEpmd(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3260 || dp == 3260))
-        appInfo = dissectIscsi(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 854 || dp == 854))
-        appInfo = dissectDlepMessage(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1721 || dp == 1721))
-        appInfo = dissectH245(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5084 || dp == 5084))
-        appInfo = dissectLlrp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6653 || dp == 6653))
-        appInfo = dissectOpenflow(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5900 || dp == 5900))
-        appInfo = dissectVnc(appBuf, appOff, appLen, fromServer = sp == 5900, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 61613 || dp == 61613))
-        appInfo = dissectStomp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 564 || dp == 564))
-        appInfo = dissect9p(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 13400 || dp == 13400))
-        appInfo = dissectDoip(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4222 || dp == 4222))
-        appInfo = dissectNats(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed &&
-        (sp == 104 || dp == 104 || sp == 11112 || dp == 11112))
-        appInfo = dissectDicom(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 8583 || dp == 8583))
-        appInfo = dissectIso8583(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5555 || dp == 5555))
-        appInfo = dissectZmtp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5555 || dp == 5555))
-        appInfo = dissectAdb(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 21001 || dp == 21001))
-        appInfo = dissectSoupbin(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 10051 || dp == 10051))
-        appInfo = dissectZabbix(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 79 || dp == 79))
-        appInfo = dissectFinger(appBuf, appOff, appLen, fromServer = sp == 79, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 70 || dp == 70))
-        appInfo = dissectGopher(appBuf, appOff, appLen, fromServer = sp == 70, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 113 || dp == 113))
-        appInfo = dissectIdent(appBuf, appOff, appLen, fromServer = sp == 113, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9418 || dp == 9418))
-        appInfo = dissectGit(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 11210 || dp == 11210))
-        appInfo = dissectCouchbase(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1521 || dp == 1521))
-        appInfo = dissectTns(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5050 || dp == 5050))
-        appInfo = dissectYmsg(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3632 || dp == 3632))
-        appInfo = dissectDistcc(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5900 || dp == 5900))
-        appInfo = dissectSpice(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6000 || dp == 6000))
-        appInfo = dissectX11(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2855 || dp == 2855))
-        appInfo = dissectMsrp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 61616 || dp == 61616))
-        appInfo = dissectOpenwire(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2600 || dp == 2600))
-        appInfo = dissectZebra(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 10000 || dp == 10000))
-        appInfo = dissectHpfeeds(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 8020 || dp == 8020))
-        appInfo = dissectHdfs(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 639 || dp == 639))
-        appInfo = dissectMsdp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 119 || dp == 119))
-        appInfo = dissectNntp(appBuf, appOff, appLen, fromServer = sp == 119, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 548 || dp == 548))
-        appInfo = dissectDsi(appBuf, appOff, appLen, fromServer = sp == 548, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1790 || dp == 1790))
-        appInfo = dissectBmp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 10809 || dp == 10809))
-        appInfo = dissectNbd(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9090 || dp == 9090))
-        appInfo = dissectThrift(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6881 || dp == 6881))
-        appInfo = dissectBittorrent(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 43 || dp == 43))
-        appInfo = dissectWhois(appBuf, appOff, appLen, fromServer = sp == 43, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 13 || dp == 13))
-        appInfo = dissectDaytime(appBuf, appOff, appLen, fromServer = sp == 13, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 515 || dp == 515))
-        appInfo = dissectLpd(appBuf, appOff, appLen, fromServer = sp == 515, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 512 || dp == 512))
-        appInfo = dissectRexec(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 513 || dp == 513))
-        appInfo = dissectRlogin(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 514 || dp == 514))
-        appInfo = dissectRsh(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1998 || dp == 1998))
-        appInfo = dissectXot(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4189 || dp == 4189))
-        appInfo = dissectPcep(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3288 || dp == 3288))
-        appInfo = dissectCops(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 705 || dp == 705))
-        appInfo = dissectAgentx(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2002 || dp == 2002))
-        appInfo = dissectRpcap(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1935 || dp == 1935))
-        appInfo = dissectRtmpt(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2809 || dp == 2809))
-        appInfo = dissectGiop(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6346 || dp == 6346))
-        appInfo = dissectGnutella(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4662 || dp == 4662))
-        appInfo = dissectEdonkey(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1344 || dp == 1344))
-        appInfo = dissectIcap(appBuf, appOff, appLen, fromServer = sp == 1344, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 524 || dp == 524))
-        appInfo = dissectNcp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 24800 || dp == 24800))
-        appInfo = dissectSynergy(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3205 || dp == 3205))
-        appInfo = dissectIsns(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4420 || dp == 4420))
-        appInfo = dissectNvmeTcp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2065 || dp == 2065))
-        appInfo = dissectDlsw(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 10000 || dp == 10000))
-        appInfo = dissectNdmp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1720 || dp == 1720))
-        appInfo = dissectQ931(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5190 || dp == 5190))
-        appInfo = dissectAim(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 446 || dp == 446))
-        appInfo = dissectDrda(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5000 || dp == 5000))
-        appInfo = dissectHsms(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 647 || dp == 647))
-        appInfo = dissectDhcpfo(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 24007 || dp == 24007))
-        appInfo = dissectGlusterfs(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9300 || dp == 9300))
-        appInfo = dissectElasticsearch(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2000 || dp == 2000))
-        appInfo = dissectSkinny(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6789 || dp == 6789))
-        appInfo = dissectCeph(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3240 || dp == 3240))
-        appInfo = dissectUsbip(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5701 || dp == 5701))
-        appInfo = dissectHazelcast(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 21064 || dp == 21064))
-        appInfo = dissectDlm3(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 7272 || dp == 7272))
-        appInfo = dissectDbus(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 650 || dp == 650))
-        appInfo = dissectObex(appBuf, appOff, appLen, v, protos)
-      // DNS over TCP (RFC 1035 §4.2.2): 2-byte length prefix, then the
-      // standard message. Under desegment, partial messages carry across
-      // delivered runs (kind 3 — zone transfers span many segments) and
-      // every message COMPLETED by this run dissects; without desegment,
-      // only a message wholly inside this segment dissects.
-      if (appInfo == null && !h2Claimed && (sp == 53 || dp == 53) && appLen > 0) {
-        if (tracker.desegment) {
-          val dnsCarry = conv.carryKind(dir) == 3 && conv.carry(dir).nonEmpty
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (dnsCarry) conv.carry(dir) ++ seg else seg
-          var i = 0
-          var lastInfo: String = null
-          var malformed = false
-          var brk = false
-          while (!brk && i + 2 <= buf.length) {
-            val mlen = u16(buf, i)
-            if (mlen < 12) { malformed = true; brk = true }
-            else if (i + 2 + mlen <= buf.length) {
-              val r = dissectDns(buf, i + 2, i + 2 + mlen, v, protos)
-              if (r != null) lastInfo = r
-              i += 2 + mlen
-            } else brk = true
-          }
-          if (malformed) {
-            // framing broke: this is not (or no longer) a sane DNS stream —
-            // drop the carry, keep whatever messages already dissected
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-          } else {
-            val rest = java.util.Arrays.copyOfRange(buf, i, buf.length)
-            conv.carry(dir) = if (rest.length > MaxCarry) Array.emptyByteArray else rest
-            conv.carryKind(dir) = if (conv.carry(dir).nonEmpty) 3 else 0
-          }
-          if (lastInfo != null) {
-            // a multi-message run adds "dns" once per message — dedupe
-            val dd = protos.distinct
-            protos.clear(); protos ++= dd
-            appInfo = lastInfo
-          } else if (conv.carry(dir).nonEmpty && conv.carryKind(dir) == 3) {
-            appInfo = "[TCP segment of a reassembled PDU]"
-          }
-        } else if (appLen >= 14) {
-          val mlen = u16(appBuf, appOff)
-          if (mlen >= 12 && 2 + mlen <= appLen) {
-            val dnsInfo = dissectDns(appBuf, appOff + 2, appOff + 2 + mlen, v, protos)
-            if (dnsInfo != null) appInfo = dnsInfo
-          }
-        }
-      }
+      appInfo = tcpApps.dispatch(new Seg(appBuf, appOff, appLen, appLen, sp, dp,
+        conv, dir, null, v, protos, tracker, wanted))
+      if (appInfo eq Claimed) appInfo = null
     }
 
     if (appInfo != null) appInfo
@@ -2821,9 +2307,588 @@ object Dissect {
     }
   }
 
+  /** FIX messages in the segment; under desegment a message split across
+    * segments carries (kind 1) and reports on its completing segment. */
+  private def tcpFix(s: Seg): String = {
+    val appBuf = s.b; val appOff = s.o; val appLen = s.n; val conv = s.tcp
+    val dir = s.dir; val v = s.v; val protos = s.p; val tracker = s.t
+    val wanted = s.w
+    var appInfo: String = null
+    val startsFix = appLen > 5 &&
+      appBuf(appOff) == '8' && appBuf(appOff + 1) == '=' && appBuf(appOff + 2) == 'F' &&
+      appBuf(appOff + 3) == 'I' && appBuf(appOff + 4) == 'X'
+    // an active HTTP carry owns the stream: a payload that happens to
+    // start with "8=FIX" mid-headers must not clobber it
+    if (tracker.desegment && conv.carryKind(dir) != 2 &&
+      (startsFix || (conv.carryKind(dir) == 1 && conv.carry(dir).nonEmpty))) {
+      // FIX reassembly: prepend this direction's carried tail, extract the
+      // messages COMPLETED by this segment, keep the new tail
+      val prev = conv.carry(dir)
+      val buf =
+        if (prev.isEmpty) java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+        else prev ++ java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val (msgs, consumed) = fixCompleteMessages(buf)
+      conv.carry(dir) =
+        if (buf.length - consumed > MaxCarry) Array.emptyByteArray
+        else java.util.Arrays.copyOfRange(buf, consumed, buf.length)
+      conv.carryKind(dir) = if (conv.carry(dir).nonEmpty) 1 else 0
+      if (msgs.nonEmpty) {
+        protos += "fix"
+        appInfo = msgs.mkString(", ")
+        v("fix.msgtype") = msgs.head
+      } else if (conv.carry(dir).nonEmpty) {
+        // mid-PDU segment: tshark-style continuation marker, no fix layer
+        appInfo = "[TCP segment of a reassembled PDU]"
+      }
+    } else if (startsFix) {
+      protos += "fix"
+      val msgs = fixMessages(appBuf, appOff, appLen,
+        if (wanted.info) Int.MaxValue else 1)
+      if (msgs.nonEmpty) {
+        // single-message segments (the overwhelming majority) reuse the
+        // cached name string — no mkString StringBuilder per row
+        if (wanted.info)
+          appInfo = if (msgs.length == 1) msgs.head else msgs.mkString(", ")
+        else appInfo = ""
+        v("fix.msgtype") = msgs.head
+      }
+    }
+    appInfo
+  }
+
+  /** HTTP/2: the 24-byte client connection preface marks the
+    * conversation; afterwards both directions sniff h2 frame headers
+    * (not HTTP/1 heuristics — h2 HEADERS are HPACK, not text). An
+    * h2-marked conversation OWNS its segments: a continuation that
+    * doesn't start on a frame boundary must fall back to the plain TCP
+    * rendering, never to the HTTP/1/TLS/DNS content heuristics (HPACK
+    * bytes would false-positive them). */
+  private def tcpHttp2(s: Seg): String = {
+    val appBuf = s.b; val appOff = s.o; val appLen = s.n; val conv = s.tcp
+    val dir = s.dir; val v = s.v; val protos = s.p; val tracker = s.t
+    var appInfo: String = null
+    var h2Claimed = false
+    // any kind-8 carry joins the segment up front, so a preface or
+    // frame split across segments completes here
+    val h2CarryPending = tracker.desegment &&
+      conv.carryKind(dir) == 8 && conv.carry(dir).nonEmpty
+    val hbuf =
+      if (h2CarryPending)
+        conv.carry(dir) ++ java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      else appBuf
+    val hoff = if (h2CarryPending) 0 else appOff
+    val hlen = if (h2CarryPending) hbuf.length else appLen
+    val isPreface = isH2Preface(hbuf, hoff, hlen)
+    if (isPreface) conv.http2 = true
+    if (conv.http2) {
+      h2Claimed = true
+      if (tracker.desegment) {
+        // frame-boundary reassembly (carry kind 8): every frame
+        // COMPLETED by this run dissects; an incomplete trailing
+        // frame (or header) carries to the completing segment —
+        // the same shape as the ws/MQTT desegment paths.
+        val consumed = h2Consumed(hbuf, hoff, hlen, isPreface)
+        if (consumed < 0) {
+          // not frame-aligned (mid-frame continuation of a run we
+          // never saw the start of): plain TCP rendering, no carry
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+          appInfo = dissectHttp2(hbuf, hoff, hlen, isPreface, conv, v, protos, dir)
+        } else {
+          if (consumed > 0)
+            appInfo = dissectHttp2(hbuf, hoff, consumed, isPreface, conv, v, protos, dir)
+          val rest = hlen - consumed
+          if (rest > 0 && rest <= MaxCarry &&
+              h2TailPlausible(hbuf, hoff + consumed, hoff + hlen)) {
+            conv.carry(dir) =
+              java.util.Arrays.copyOfRange(hbuf, hoff + consumed, hoff + hlen)
+            conv.carryKind(dir) = 8
+            if (appInfo == null) appInfo = "[TCP segment of a reassembled PDU]"
+          } else if (conv.carryKind(dir) == 8) {
+            conv.carry(dir) = Array.emptyByteArray
+            conv.carryKind(dir) = 0
+          }
+        }
+      } else {
+        appInfo = dissectHttp2(appBuf, appOff, appLen, isPreface, conv, v, protos, dir)
+      }
+    } else if (tracker.desegment && hlen < h2Preface.length &&
+        isH2PrefacePrefix(hbuf, hoff, hlen) && hlen <= MaxCarry) {
+      // a strict prefix of the client preface: carry (kind 8) and
+      // wait — nothing else can start with these bytes
+      conv.carry(dir) = java.util.Arrays.copyOfRange(hbuf, hoff, hoff + hlen)
+      conv.carryKind(dir) = 8
+      h2Claimed = true
+      appInfo = "[TCP segment of a reassembled PDU]"
+    } else if (h2CarryPending) {
+      // carried bytes turned out not to be h2 after all
+      conv.carry(dir) = Array.emptyByteArray
+      conv.carryKind(dir) = 0
+    }
+    if (h2Claimed && appInfo == null) Claimed else appInfo
+  }
+
+  /** HTTP/1 under desegment: the message carries (kind 2) until its header
+    * block, and a chunked body's terminal chunk, has arrived. */
+  private def tcpHttpDesegment(s: Seg): String = {
+    if (!s.t.desegment) return null
+    val appBuf = s.b; val appOff = s.o; val appLen = s.n; val conv = s.tcp
+    val dir = s.dir; val v = s.v; val protos = s.p
+    var appInfo: String = null
+    val httpCarry = conv.carryKind(dir) == 2 && conv.carry(dir).nonEmpty
+    val head = new String(appBuf, appOff, math.min(appLen, 10), "ISO-8859-1")
+    val looksHttpStart = head.startsWith("HTTP/1.") || httpMethods.exists(head.startsWith)
+    if (httpCarry || looksHttpStart) {
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (httpCarry) conv.carry(dir) ++ seg else seg
+      val hEnd = indexOfCrlfCrlf(buf)
+      if (hEnd >= 0) {
+        // chunked transfer coding: keep carrying past the header block
+        // until the terminal 0-chunk arrives, then decode the body
+        // (tshark reports the message on its final segment); bytes past
+        // the terminal chunk (a pipelined next message) are dropped
+        val chunked = isChunkedHeaders(buf, hEnd + 4)
+        val body = if (chunked) decodeChunked(buf, hEnd + 4) else null
+        if (chunked && body == null && buf.length <= MaxCarry) {
+          conv.carry(dir) = buf
+          conv.carryKind(dir) = 2
+          appInfo = "[TCP segment of a reassembled PDU]"
+        } else {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+          appInfo = dissectHttp(buf, 0, buf.length, v, protos)
+          if (body != null && appInfo != null) {
+            v("http.transfer_encoding") = "chunked"
+            // gzip entity coding: file_data carries the DECOMPRESSED
+            // body (tshark semantics); undecodable gzip keeps the raw
+            val hdrs = new String(buf, 0, hEnd, "ISO-8859-1")
+              .toLowerCase(java.util.Locale.ROOT).replace(" ", "")
+            val dec = if (hdrs.contains("content-encoding:gzip"))
+              gunzipBody(body) else null
+            if (dec != null) v("http.content_encoding") = "gzip"
+            v("http.file_data") = if (dec != null) dec else body
+          }
+          // the upgrade flip must also happen on the desegment path,
+          // or a 101 seen here would leave ws frames undissected
+          if (appInfo != null && appInfo.startsWith("HTTP/1.1 101")) {
+            val txt = new String(buf, 0, math.min(buf.length, 1024),
+              "ISO-8859-1").toLowerCase(java.util.Locale.ROOT)
+            if (txt.contains("upgrade: websocket")) conv.wsUpgraded = true
+          }
+        }
+      } else if (buf.length <= MaxCarry) {
+        conv.carry(dir) = buf
+        conv.carryKind(dir) = 2
+        appInfo = "[TCP segment of a reassembled PDU]"
+      } else {
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+      }
+    }
+    appInfo
+  }
+
+  /** A completed websocket upgrade owns the conversation's bytes from
+    * the segment AFTER the 101 (the 101 itself still renders as HTTP).
+    * WebSocket framing is self-describing (header + declared payload
+    * length), so under desegment a frame spanning TCP segments carries
+    * (kind 7) until complete, then dissects — and unmasks — on the
+    * completing segment, tshark reassembly semantics. Without
+    * desegment only the header's fields surface (no payload text). */
+  private def tcpWebsocket(s: Seg): String = {
+    if (!s.tcp.wsUpgraded) return null
+    val appBuf = s.b; val appOff = s.o; val appLen = s.n; val conv = s.tcp
+    val dir = s.dir; val v = s.v; val protos = s.p; val tracker = s.t
+    var appInfo: String = null
+    if (tracker.desegment) {
+      // Like the MQTT multi-PDU path: every frame COMPLETED by this
+      // run dissects, and only the trailing partial frame carries
+      // (kind 7) to the completing segment.
+      val wsCarry = conv.carryKind(dir) == 7 && conv.carry(dir).nonEmpty
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (wsCarry) conv.carry(dir) ++ seg else seg
+      val infos = mutable.ArrayBuffer.empty[String]
+      var i = 0
+      var lastNeed = 0L
+      var stop = false
+      var bad = false
+      while (!stop) {
+        lastNeed = wsFrameLen(buf, i, buf.length - i)
+        if (lastNeed > 0 && buf.length - i >= lastNeed) {
+          val r = dissectWebsocket(buf, i, lastNeed.toInt, v, protos)
+          if (r == null) { stop = true; bad = infos.isEmpty && !wsCarry }
+          else { infos += r; i += lastNeed.toInt }
+        } else if (lastNeed == 0) {
+          stop = true; bad = infos.isEmpty && !wsCarry
+        } else {
+          stop = true // incomplete header or partial frame: wait
+        }
+      }
+      if (!bad) {
+        val rest = buf.length - i
+        if (rest > 0 && rest <= MaxCarry && lastNeed != 0) {
+          conv.carry(dir) = java.util.Arrays.copyOfRange(buf, i, buf.length)
+          conv.carryKind(dir) = 7
+        } else if (conv.carryKind(dir) == 7) {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+        }
+        if (infos.nonEmpty) {
+          // One "websocket" layer appended per frame; collapse only
+          // the trailing run (as the MQTT loop does).
+          while (protos.length >= 2 && protos.last == "websocket" &&
+                 protos(protos.length - 2) == "websocket")
+            protos.remove(protos.length - 1)
+          appInfo = infos.mkString(", ")
+        } else if (conv.carryKind(dir) == 7 && conv.carry(dir).nonEmpty) {
+          appInfo = "[TCP segment of a reassembled PDU]"
+        }
+      } else {
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+        appInfo = dissectWebsocket(appBuf, appOff, appLen, v, protos)
+      }
+    } else {
+      appInfo = dissectWebsocket(appBuf, appOff, appLen, v, protos)
+    }
+    appInfo
+  }
+
+  /** FTP: line-oriented — under desegment an incomplete trailing line
+    * carries across delivered runs (kind 4) and dissects on the run
+    * that completes its CRLF (tshark reassembly semantics); without
+    * desegment only whole-in-segment lines dissect. */
+  private def tcpFtp(s: Seg): String = {
+    val appBuf = s.b; val appOff = s.o; val appLen = s.n; val sp = s.sp
+    val conv = s.tcp; val dir = s.dir; val v = s.v; val protos = s.p
+    val tracker = s.t
+    var appInfo: String = null
+    if (tracker.desegment) {
+      val ftpCarry = conv.carryKind(dir) == 4 && conv.carry(dir).nonEmpty
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (ftpCarry) conv.carry(dir) ++ seg else seg
+      var lastCrlf = -1
+      var i = buf.length - 2
+      while (lastCrlf < 0 && i >= 0) {
+        if (buf(i) == '\r' && buf(i + 1) == '\n') lastCrlf = i
+        i -= 1
+      }
+      if (lastCrlf >= 0)
+        appInfo = dissectFtp(buf, 0, lastCrlf + 2, fromServer = sp == 21, v, protos)
+      val restLen = buf.length - (if (lastCrlf >= 0) lastCrlf + 2 else 0)
+      if (restLen > 0 && restLen <= MaxCarry && (appInfo != null || ftpCarry ||
+        looksFtpStart(buf, fromServer = sp == 21))) {
+        conv.carry(dir) = java.util.Arrays.copyOfRange(buf, buf.length - restLen, buf.length)
+        conv.carryKind(dir) = 4
+        if (appInfo == null) appInfo = "[TCP segment of a reassembled PDU]"
+      } else if (conv.carryKind(dir) == 4) {
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+      }
+    } else {
+      appInfo = dissectFtp(appBuf, appOff, appLen, fromServer = sp == 21, v, protos)
+    }
+    appInfo
+  }
+
+  /** SIP over TCP (RFC 3261 §18.3): the message length is the header
+    * block plus Content-Length, so under desegment a message spanning
+    * segments carries (kind 5) until headers + body are complete and
+    * dissects on the completing segment — identical fields/RTP-port
+    * registration to the whole-in-segment case. Bytes past the message
+    * (a pipelined next one) are dropped, the HTTP-path simplification. */
+  private def tcpSip(s: Seg): String = {
+    val appBuf = s.b; val appOff = s.o; val appLen = s.n; val conv = s.tcp
+    val dir = s.dir; val v = s.v; val protos = s.p; val tracker = s.t
+    var appInfo: String = null
+    if (tracker.desegment) {
+      val sipCarry = conv.carryKind(dir) == 5 && conv.carry(dir).nonEmpty
+      val head = new String(appBuf, appOff, math.min(appLen, 12), "ISO-8859-1")
+      val looksSipStart = head.startsWith("SIP/2.0 ") ||
+        sipMethods.exists(m => head.startsWith(m + " "))
+      if (sipCarry || looksSipStart) {
+        val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+        val buf = if (sipCarry) conv.carry(dir) ++ seg else seg
+        val hEnd = indexOfCrlfCrlf(buf)
+        val want = if (hEnd < 0) -1 else hEnd + 4 + sipContentLength(buf, hEnd + 4)
+        if (hEnd >= 0 && want >= 0 && buf.length >= want) {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+          appInfo = dissectSip(buf, 0, want, v, protos, tracker)
+        } else if (buf.length <= MaxCarry) {
+          conv.carry(dir) = buf
+          conv.carryKind(dir) = 5
+          appInfo = "[TCP segment of a reassembled PDU]"
+        } else {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+        }
+      }
+    } else {
+      appInfo = dissectSip(appBuf, appOff, appLen, v, protos, tracker)
+    }
+    appInfo
+  }
+
+  /** MQTT framing is the fixed header's varint length, so under
+    * desegment every PDU COMPLETED by this run dissects (multi-PDU
+    * segments list each message, tshark-style) and a trailing partial
+    * PDU carries (kind 6) to the completing segment. */
+  private def tcpMqtt(s: Seg): String = {
+    val appBuf = s.b; val appOff = s.o; val appLen = s.n; val conv = s.tcp
+    val dir = s.dir; val v = s.v; val protos = s.p; val tracker = s.t
+    var appInfo: String = null
+    if (tracker.desegment) {
+      val mqCarry = conv.carryKind(dir) == 6 && conv.carry(dir).nonEmpty
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (mqCarry) conv.carry(dir) ++ seg else seg
+      val infos = mutable.ArrayBuffer.empty[String]
+      var i = 0
+      var bad = false
+      var stop = false
+      while (!stop) {
+        mqttPduLen(buf, i, buf.length) match {
+          case -2 => stop = true; bad = i == 0 && !mqCarry
+          case -1 => stop = true
+          case n =>
+            val r = dissectMqtt(buf, i, n, v, protos)
+            if (r == null) { stop = true; bad = infos.isEmpty && !mqCarry }
+            else { infos += r; i += n }
+        }
+      }
+      if (!bad) {
+        val rest = buf.length - i
+        if (rest > 0 && rest <= MaxCarry && mqttPduLen(buf, i, buf.length) == -1) {
+          conv.carry(dir) = java.util.Arrays.copyOfRange(buf, i, buf.length)
+          conv.carryKind(dir) = 6
+        } else if (conv.carryKind(dir) == 6) {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+        }
+        if (infos.nonEmpty) {
+          // The multi-PDU loop appended one "mqtt" per PDU; collapse
+          // only that trailing run (Wireshark keeps legitimately
+          // repeated layers elsewhere in the chain, e.g. ip:gre:ip).
+          while (protos.length >= 2 && protos.last == "mqtt" &&
+                 protos(protos.length - 2) == "mqtt")
+            protos.remove(protos.length - 1)
+          appInfo = infos.mkString(", ")
+        } else if (conv.carryKind(dir) == 6 && conv.carry(dir).nonEmpty) {
+          appInfo = "[TCP segment of a reassembled PDU]"
+        }
+      } else if (conv.carryKind(dir) == 6) {
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+      }
+    } else {
+      appInfo = dissectMqtt(appBuf, appOff, appLen, v, protos)
+    }
+    appInfo
+  }
+
+  /** DNS over TCP (RFC 1035 §4.2.2): 2-byte length prefix, then the
+    * standard message. Under desegment, partial messages carry across
+    * delivered runs (kind 3 — zone transfers span many segments) and
+    * every message COMPLETED by this run dissects; without desegment,
+    * only a message wholly inside this segment dissects. */
+  private def tcpDns(s: Seg): String = {
+    val appBuf = s.b; val appOff = s.o; val appLen = s.n; val conv = s.tcp
+    val dir = s.dir; val v = s.v; val protos = s.p; val tracker = s.t
+    var appInfo: String = null
+    if (tracker.desegment) {
+      val dnsCarry = conv.carryKind(dir) == 3 && conv.carry(dir).nonEmpty
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (dnsCarry) conv.carry(dir) ++ seg else seg
+      var i = 0
+      var lastInfo: String = null
+      var malformed = false
+      var brk = false
+      while (!brk && i + 2 <= buf.length) {
+        val mlen = u16(buf, i)
+        if (mlen < 12) { malformed = true; brk = true }
+        else if (i + 2 + mlen <= buf.length) {
+          val r = dissectDns(buf, i + 2, i + 2 + mlen, v, protos)
+          if (r != null) lastInfo = r
+          i += 2 + mlen
+        } else brk = true
+      }
+      if (malformed) {
+        // framing broke: this is not (or no longer) a sane DNS stream —
+        // drop the carry, keep whatever messages already dissected
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+      } else {
+        val rest = java.util.Arrays.copyOfRange(buf, i, buf.length)
+        conv.carry(dir) = if (rest.length > MaxCarry) Array.emptyByteArray else rest
+        conv.carryKind(dir) = if (conv.carry(dir).nonEmpty) 3 else 0
+      }
+      if (lastInfo != null) {
+        // a multi-message run adds "dns" once per message — dedupe
+        val dd = protos.distinct
+        protos.clear(); protos ++= dd
+        appInfo = lastInfo
+      } else if (conv.carry(dir).nonEmpty && conv.carryKind(dir) == 3) {
+        appInfo = "[TCP segment of a reassembled PDU]"
+      }
+    } else if (appLen >= 14) {
+      val mlen = u16(appBuf, appOff)
+      if (mlen >= 12 && 2 + mlen <= appLen) {
+        val dnsInfo = dissectDns(appBuf, appOff + 2, appOff + 2 + mlen, v, protos)
+        if (dnsInfo != null) appInfo = dnsInfo
+      }
+    }
+    appInfo
+  }
+
+  /** TCP application dissectors in try order: the content-sniffing ones
+    * (FIX, HTTP/2, HTTP, WebSocket, TLS) on every port, then the
+    * port-registered ones. An HTTP/2 conversation claims its segments, so
+    * no later dissector sees its HPACK bytes. */
+  private val tcpApps = new PortTable(
+    on()(tcpFix),
+    on()(tcpHttp2),
+    on()(tcpHttpDesegment),
+    on()(tcpWebsocket),
+    on() { s =>
+      val info = dissectHttp(s.b, s.o, s.n, s.v, s.p)
+      if (info != null && info.startsWith("HTTP/1.1 101")) {
+        val txt = new String(s.b, s.o, math.min(s.n, 1024),
+          "ISO-8859-1").toLowerCase(java.util.Locale.ROOT)
+        if (txt.contains("upgrade: websocket")) s.tcp.wsUpgraded = true
+      }
+      info
+    },
+    on() { s =>
+      val info = dissectTls(s.b, s.o, s.n, s.sp, s.dp, s.v, s.p)
+      // DNS-over-TLS (RFC 7858): TLS on registered port 853 — payload
+      // stays encrypted; the transport marker is what analytics can see
+      if (info != null && (s.sp == 853 || s.dp == 853)) info + " (DNS-over-TLS)" else info
+    },
+    on(445, 139)(s => dissectNbssSmb(s.b, s.o, s.n, s.v, s.p)),
+    on(3389)(s => dissectRdp(s.b, s.o, s.n, s.v, s.p)),
+    on(3868)(s => dissectDiameter(s.b, s.o, s.end, s.v, s.p)),
+    on(554)(s => dissectRtsp(s.b, s.o, s.n, s.v, s.p)),
+    on(135)(s => dissectDcerpc(s.b, s.o, s.n, s.v, s.p)),
+    on(1080)(s => dissectSocks(s.b, s.o, s.n, fromServer = s.sp == 1080, s.v, s.p)),
+    on(21)(tcpFtp),
+    on(22)(s => dissectSsh(s.b, s.o, s.n, fromServer = s.sp == 22, s.v, s.p)),
+    on(5060)(tcpSip),
+    on(88)(s => dissectKrb5(s.b, s.o, s.n, overTcp = true, s.v, s.p)),
+    on(2049)(s => dissectRpcNfs(s.b, s.o, s.n, overTcp = true, s.v, s.p, s.t)),
+    on(389)(s => dissectLdap(s.b, s.o, s.n, s.v, s.p)),
+    on(502)(s => dissectModbus(s.b, s.o, s.n, s.v, s.p)),
+    on(102)(s => dissectS7(s.b, s.o, s.n, s.v, s.p)),
+    on(102)(s => dissectMms(s.b, s.o, s.n, s.v, s.p)),
+    on(20000)(s => dissectDnp3(s.b, s.o, s.n, s.v, s.p)),
+    on(2404)(s => dissectIec104(s.b, s.o, s.n, s.v, s.p)),
+    on(44818)(s => dissectEnip(s.b, s.o, s.n, s.v, s.p)),
+    on(4840)(s => dissectOpcua(s.b, s.o, s.n, s.v, s.p)),
+    on(6667)(s => dissectIrc(s.b, s.o, s.n, fromServer = s.sp == 6667, s.v, s.p)),
+    on(5222)(s => dissectXmpp(s.b, s.o, s.n, s.v, s.p)),
+    on(2775)(s => dissectSmpp(s.b, s.o, s.n, s.v, s.p)),
+    on(1723)(s => dissectPptp(s.b, s.o, s.n, s.v, s.p)),
+    on(49)(s => dissectTacplus(s.b, s.o, s.n, s.v, s.p)),
+    on(23)(s => dissectTelnet(s.b, s.o, s.n, s.v, s.p)),
+    on(25, 587)(s => dissectSmtp(s.b, s.o, s.n, fromServer = s.sp == 25 || s.sp == 587, s.v, s.p)),
+    on(110)(s => dissectPop(s.b, s.o, s.n, fromServer = s.sp == 110, s.v, s.p)),
+    on(143)(s => dissectImap(s.b, s.o, s.n, fromServer = s.sp == 143, s.v, s.p)),
+    on(179)(s => dissectBgp(s.b, s.o, s.n, s.v, s.p)),
+    on(1883)(tcpMqtt),
+    on(1433)(s => dissectTds(s.b, s.o, s.n, s.v, s.p)),
+    on(5672)(s => dissectAmqp(s.b, s.o, s.n, s.v, s.p)),
+    on(5432)(s => dissectPgsql(s.b, s.o, s.n, s.v, s.p)),
+    on(3306)(s => dissectMysql(s.b, s.o, s.n, fromServer = s.sp == 3306, s.v, s.p)),
+    on(6379)(s => dissectRedis(s.b, s.o, s.n, s.v, s.p)),
+    on(9092)(s => dissectKafka(s.b, s.o, s.n, fromServer = s.sp == 9092, s.tcp, s.v, s.p)),
+    on(9042)(s => dissectCql(s.b, s.o, s.n, s.v, s.p)),
+    on(11211)(s => dissectMemcache(s.b, s.o, s.n, fromServer = s.sp == 11211, s.v, s.p)),
+    on(27017)(s => dissectMongo(s.b, s.o, s.n, s.v, s.p)),
+    on(873)(s => dissectRsync(s.b, s.o, s.n, fromServer = s.sp == 873, s.tcp, s.v, s.p)),
+    on(4730)(s => dissectGearman(s.b, s.o, s.n, s.v, s.p)),
+    on(8009)(s => dissectAjp13(s.b, s.o, s.n, fromServer = s.sp == 8009, s.v, s.p)),
+    on(8333)(s => dissectBitcoin(s.b, s.o, s.n, s.v, s.p)),
+    on(9000)(s => dissectFcgi(s.b, s.o, s.n, s.v, s.p)),
+    on(4369)(s => if (s.dp == 4369) dissectEpmd(s.b, s.o, s.n, s.v, s.p) else null),
+    on(3260)(s => dissectIscsi(s.b, s.o, s.n, s.v, s.p)),
+    on(854)(s => dissectDlepMessage(s.b, s.o, s.n, s.v, s.p)),
+    on(1721)(s => dissectH245(s.b, s.o, s.n, s.v, s.p)),
+    on(5084)(s => dissectLlrp(s.b, s.o, s.n, s.v, s.p)),
+    on(6653)(s => dissectOpenflow(s.b, s.o, s.n, s.v, s.p)),
+    on(5900)(s => dissectVnc(s.b, s.o, s.n, fromServer = s.sp == 5900, s.v, s.p)),
+    on(61613)(s => dissectStomp(s.b, s.o, s.n, s.v, s.p)),
+    on(564)(s => dissect9p(s.b, s.o, s.n, s.v, s.p)),
+    on(13400)(s => dissectDoip(s.b, s.o, s.n, s.v, s.p)),
+    on(4222)(s => dissectNats(s.b, s.o, s.n, s.v, s.p)),
+    on(104, 11112)(s => dissectDicom(s.b, s.o, s.n, s.v, s.p)),
+    on(8583)(s => dissectIso8583(s.b, s.o, s.n, s.v, s.p)),
+    on(5555)(s => dissectZmtp(s.b, s.o, s.n, s.v, s.p)),
+    on(5555)(s => dissectAdb(s.b, s.o, s.n, s.v, s.p)),
+    on(21001)(s => dissectSoupbin(s.b, s.o, s.n, s.v, s.p)),
+    on(10051)(s => dissectZabbix(s.b, s.o, s.n, s.v, s.p)),
+    on(79)(s => dissectFinger(s.b, s.o, s.n, fromServer = s.sp == 79, s.v, s.p)),
+    on(70)(s => dissectGopher(s.b, s.o, s.n, fromServer = s.sp == 70, s.v, s.p)),
+    on(113)(s => dissectIdent(s.b, s.o, s.n, fromServer = s.sp == 113, s.v, s.p)),
+    on(9418)(s => dissectGit(s.b, s.o, s.n, s.v, s.p)),
+    on(11210)(s => dissectCouchbase(s.b, s.o, s.n, s.v, s.p)),
+    on(1521)(s => dissectTns(s.b, s.o, s.n, s.v, s.p)),
+    on(5050)(s => dissectYmsg(s.b, s.o, s.n, s.v, s.p)),
+    on(3632)(s => dissectDistcc(s.b, s.o, s.n, s.v, s.p)),
+    on(5900)(s => dissectSpice(s.b, s.o, s.n, s.v, s.p)),
+    on(6000)(s => dissectX11(s.b, s.o, s.n, s.v, s.p)),
+    on(2855)(s => dissectMsrp(s.b, s.o, s.n, s.v, s.p)),
+    on(61616)(s => dissectOpenwire(s.b, s.o, s.n, s.v, s.p)),
+    on(2600)(s => dissectZebra(s.b, s.o, s.n, s.v, s.p)),
+    on(10000)(s => dissectHpfeeds(s.b, s.o, s.n, s.v, s.p)),
+    on(8020)(s => dissectHdfs(s.b, s.o, s.n, s.v, s.p)),
+    on(639)(s => dissectMsdp(s.b, s.o, s.n, s.v, s.p)),
+    on(119)(s => dissectNntp(s.b, s.o, s.n, fromServer = s.sp == 119, s.v, s.p)),
+    on(548)(s => dissectDsi(s.b, s.o, s.n, fromServer = s.sp == 548, s.v, s.p)),
+    on(1790)(s => dissectBmp(s.b, s.o, s.n, s.v, s.p)),
+    on(10809)(s => dissectNbd(s.b, s.o, s.n, s.v, s.p)),
+    on(9090)(s => dissectThrift(s.b, s.o, s.n, s.v, s.p)),
+    on(6881)(s => dissectBittorrent(s.b, s.o, s.n, s.v, s.p)),
+    on(43)(s => dissectWhois(s.b, s.o, s.n, fromServer = s.sp == 43, s.v, s.p)),
+    on(13)(s => dissectDaytime(s.b, s.o, s.n, fromServer = s.sp == 13, s.v, s.p)),
+    on(515)(s => dissectLpd(s.b, s.o, s.n, fromServer = s.sp == 515, s.v, s.p)),
+    on(512)(s => dissectRexec(s.b, s.o, s.n, s.v, s.p)),
+    on(513)(s => dissectRlogin(s.b, s.o, s.n, s.v, s.p)),
+    on(514)(s => dissectRsh(s.b, s.o, s.n, s.v, s.p)),
+    on(1998)(s => dissectXot(s.b, s.o, s.n, s.v, s.p)),
+    on(4189)(s => dissectPcep(s.b, s.o, s.n, s.v, s.p)),
+    on(3288)(s => dissectCops(s.b, s.o, s.n, s.v, s.p)),
+    on(705)(s => dissectAgentx(s.b, s.o, s.n, s.v, s.p)),
+    on(2002)(s => dissectRpcap(s.b, s.o, s.n, s.v, s.p)),
+    on(1935)(s => dissectRtmpt(s.b, s.o, s.n, s.v, s.p)),
+    on(2809)(s => dissectGiop(s.b, s.o, s.n, s.v, s.p)),
+    on(6346)(s => dissectGnutella(s.b, s.o, s.n, s.v, s.p)),
+    on(4662)(s => dissectEdonkey(s.b, s.o, s.n, s.v, s.p)),
+    on(1344)(s => dissectIcap(s.b, s.o, s.n, fromServer = s.sp == 1344, s.v, s.p)),
+    on(524)(s => dissectNcp(s.b, s.o, s.n, s.v, s.p)),
+    on(24800)(s => dissectSynergy(s.b, s.o, s.n, s.v, s.p)),
+    on(3205)(s => dissectIsns(s.b, s.o, s.n, s.v, s.p)),
+    on(4420)(s => dissectNvmeTcp(s.b, s.o, s.n, s.v, s.p)),
+    on(2065)(s => dissectDlsw(s.b, s.o, s.n, s.v, s.p)),
+    on(10000)(s => dissectNdmp(s.b, s.o, s.n, s.v, s.p)),
+    on(1720)(s => dissectQ931(s.b, s.o, s.n, s.v, s.p)),
+    on(5190)(s => dissectAim(s.b, s.o, s.n, s.v, s.p)),
+    on(446)(s => dissectDrda(s.b, s.o, s.n, s.v, s.p)),
+    on(5000)(s => dissectHsms(s.b, s.o, s.n, s.v, s.p)),
+    on(647)(s => dissectDhcpfo(s.b, s.o, s.n, s.v, s.p)),
+    on(24007)(s => dissectGlusterfs(s.b, s.o, s.n, s.v, s.p)),
+    on(9300)(s => dissectElasticsearch(s.b, s.o, s.n, s.v, s.p)),
+    on(2000)(s => dissectSkinny(s.b, s.o, s.n, s.v, s.p)),
+    on(6789)(s => dissectCeph(s.b, s.o, s.n, s.v, s.p)),
+    on(3240)(s => dissectUsbip(s.b, s.o, s.n, s.v, s.p)),
+    on(5701)(s => dissectHazelcast(s.b, s.o, s.n, s.v, s.p)),
+    on(21064)(s => dissectDlm3(s.b, s.o, s.n, s.v, s.p)),
+    on(7272)(s => dissectDbus(s.b, s.o, s.n, s.v, s.p)),
+    on(650)(s => dissectObex(s.b, s.o, s.n, s.v, s.p)),
+    on(53)(tcpDns),
+  )
+
   private def dissectUdp(
       d: Array[Byte], off: Int, ipEnd: Int,
-      srcIp: String, dstIp: String,
+      ip: Array[Byte], srcAt: Int, alen: Int,
       v: FieldVec,
       protos: mutable.ArrayBuffer[String],
       tracker: Tracker,
@@ -2834,8 +2899,8 @@ object Dissect {
     val dp = u16(d, off + 2)
     val len = u16(d, off + 4)
     val payLen = math.max(0, len - 8)
-    val (key, _) = ConvKey.canonical(srcIp, sp, dstIp, dp)
-    val conv = tracker.udpConv(key)
+    tracker.probe.set(ip, srcAt, alen, sp, dp)
+    val conv = tracker.udpConv(tracker.probe)
     val nowUs = tracker.currentTsMicros
     if (conv.firstTsMicros < 0) conv.firstTsMicros = nowUs
     v.set(Id_udp_time_relative, nowUs - conv.firstTsMicros)
@@ -2860,827 +2925,16 @@ object Dissect {
     if (dp >= 33434 && dp <= 33633) v("udp.possible_traceroute") =
       "Possible traceroute"
     // verify the checksum over the IPv4 pseudo-header when the datagram is
-    // fully captured (v6 strings are not reparsed; those stay unverified)
-    if (ckStored != 0 && len >= 8 && off + len <= d.length &&
-        srcIp != null && srcIp.indexOf('.') > 0) {
-      val sp4 = srcIp.split('.'); val dp4 = dstIp.split('.')
-      if (sp4.length == 4 && dp4.length == 4) {
-        var sum = 0L
-        def add16(x: Int): Unit = sum += (x & 0xffff)
-        add16((sp4(0).toInt << 8) | sp4(1).toInt)
-        add16((sp4(2).toInt << 8) | sp4(3).toInt)
-        add16((dp4(0).toInt << 8) | dp4(1).toInt)
-        add16((dp4(2).toInt << 8) | dp4(3).toInt)
-        add16(17); add16(len)
-        // checksum-offload detection: a transmitting stack leaves the
-        // UNCOMPLEMENTED pseudo-header sum in the field for the NIC to
-        // finish; seeing exactly that value means a partial checksum
-        var ps = sum
-        while ((ps >> 16) != 0) ps = (ps & 0xffff) + (ps >> 16)
-        if (ckStored == ps.toInt)
-          v("udp.checksum.partial") = "Partial (pseudo header checksum)"
-        var i = off
-        val udpEnd = off + len
-        while (i + 1 < udpEnd) {
-          if (i != off + 6) add16((u8(d, i) << 8) | u8(d, i + 1))
-          i += 2
-        }
-        if (i < udpEnd) add16(u8(d, i) << 8)
-        while ((sum >> 16) != 0) sum = (sum & 0xffff) + (sum >> 16)
-        val calc0 = (~sum).toInt & 0xffff
-        val calc = if (calc0 == 0) 0xffff else calc0
-        v("udp.checksum_calculated") = calc.toLong
-        if (calc != ckStored) v("udp.checksum.bad") = "Bad checksum"
-        v("udp.checksum.status") = if (calc == ckStored) 1L else 0L
-      }
-    }
+    // fully captured (IPv6 stays unverified)
+    if (ckStored != 0 && len >= 8 && off + len <= d.length && alen == 4)
+      udpChecksum(d, off, len, ckStored, ip, srcAt, v)
     v.set(Id_udp_pdu_size, payLen.toLong)
     if (wanted.payloads && payLen > 0 && off + 8 < d.length)
       v.set(Id_udp_payload, hexBytes(d, off + 8, math.min(payLen, d.length - off - 8)))
-    if (sp == 53 || dp == 53) {
-      val dnsInfo = dissectDns(d, off + 8, math.min(off + 8 + payLen, d.length), v, protos)
-      if (dnsInfo != null) return dnsInfo
-    }
-    if (sp == 5353 || dp == 5353) {
-      val mdnsInfo = dissectDns(d, off + 8, math.min(off + 8 + payLen, d.length),
-        v, protos, protoName = "mdns")
-      if (mdnsInfo != null) return mdnsInfo
-    }
-    // LLMNR (RFC 4795, UDP 5355) is DNS wire format — Wireshark routes it
-    // through the DNS dissector too (dns.* fields under an llmnr layer)
-    if (sp == 5355 || dp == 5355) {
-      val llmnrInfo = dissectDns(d, off + 8, math.min(off + 8 + payLen, d.length),
-        v, protos, protoName = "llmnr")
-      if (llmnrInfo != null) return llmnrInfo
-    }
-    if (sp == 137 || dp == 137) {
-      val nbnsInfo = dissectNbns(d, off + 8, math.min(off + 8 + payLen, d.length), v, protos)
-      if (nbnsInfo != null) return nbnsInfo
-    }
-    if (sp == 3478 || dp == 3478) {
-      val stunInfo = dissectStun(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (stunInfo != null) return stunInfo
-      // same port, no RFC 5389 magic cookie → classic STUN (RFC 3489)
-      val csInfo = dissectClassicStun(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (csInfo != null) return csInfo
-    }
-    if (sp == 319 || dp == 319 || sp == 320 || dp == 320) {
-      val ptpInfo = dissectPtp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (ptpInfo != null) return ptpInfo
-    }
-    if (sp == 546 || dp == 546 || sp == 547 || dp == 547) {
-      val d6Info = dissectDhcpv6(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (d6Info != null) return d6Info
-    }
-    if (sp == 51820 || dp == 51820) {
-      val wgInfo = dissectWireguard(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (wgInfo != null) return wgInfo
-    }
-    if (sp == 2152 || dp == 2152) {
-      val gtpInfo = dissectGtpU(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos, tracker, wanted)
-      if (gtpInfo != null) return gtpInfo
-    }
-    if (sp == 500 || dp == 500 || sp == 4500 || dp == 4500) {
-      val ikeInfo = dissectIkev2(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (ikeInfo != null) return ikeInfo
-    }
-    // NAT-T (RFC 3948): on 4500, a non-zero first word is a UDP-
-    // encapsulated ESP packet's SPI (zero would be the IKE marker)
-    if ((sp == 4500 || dp == 4500) && payLen >= 8 &&
-      off + 16 <= d.length && u32(d, off + 8) != 0L) {
-      protos += "esp"
-      return dissectEsp(d, off + 8, math.min(off + 8 + payLen, d.length), v)
-    }
-    if (sp == 1701 || dp == 1701) {
-      val l2tpInfo = dissectL2tp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (l2tpInfo != null) return l2tpInfo
-    }
-    if (sp == 5683 || dp == 5683) {
-      val coapInfo = dissectCoap(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (coapInfo != null) return coapInfo
-    }
-    if (sp == 2269 || dp == 2269) {
-      val mkInfo = dissectMikey(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (mkInfo != null) return mkInfo
-    }
-    if (sp == 5070 || dp == 5070) {
-      val bfInfo = dissectBfcp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (bfInfo != null) return bfInfo
-    }
-    if (sp == 1719 || dp == 1719) {
-      val rasInfo = dissectH225Ras(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (rasInfo != null) return rasInfo
-    }
-    if (sp == 2945 || dp == 2945) {
-      val h248Info = dissectH248Bin(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (h248Info != null) return h248Info
-    }
-    // PROFINET IO context manager (UDP 34964): IODConnect rides
-    // connectionless DCE/RPC v4 (C706 CL header, 80 bytes), then the
-    // NDR args envelope and the big-endian PNIO block list
-    if (sp == 34964 || dp == 34964) {
-      val pnInfo = dissectPnioCm(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (pnInfo != null) return pnInfo
-    }
-    // MLE (Thread Mesh Link Establishment, UDP 19788): only the
-    // UNSECURED shape is claimable from bytes — security suite 255
-    // means no security header, and the command byte follows directly
-    if ((sp == 19788 || dp == 19788) && payLen >= 2 && off + 10 <= d.length &&
-      u8(d, off + 8) == 255) {
-      val cmd = u8(d, off + 9)
-      if (cmd <= 16) {
-        protos += "mle"
-        v("mle.cmd") = cmd.toLong
-        return cmd match {
-          case 0 => "Link Request"; case 1 => "Link Accept"
-          case 4 => "Advertisement"; case 10 => "Child ID Request"
-          case c => s"MLE command $c"
-        }
-      }
-    }
-    // Gb over IP (3GPP TS 48.016): the NS layer on UDP 23000 whose
-    // NS-UNITDATA PDUs carry BSSGP
-    if (sp == 23000 || dp == 23000) {
-      val nsInfo = dissectNsBssgp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (nsInfo != null) return nsInfo
-    }
-    // MAC-LTE framed over UDP (Wireshark's packet-mac-lte.h UDP framing):
-    // the payload leads with the "mac-lte" magic on any port
-    if (payLen >= 10 && off + 8 + 7 <= d.length &&
-      d(off + 8) == 'm' && d(off + 9) == 'a' && d(off + 10) == 'c' &&
-      d(off + 11) == '-' && d(off + 12) == 'l' && d(off + 13) == 't' &&
-      d(off + 14) == 'e') {
-      val mlInfo = dissectMacLte(d, off + 15, math.min(off + 8 + payLen, d.length), v, protos)
-      if (mlInfo != null) return mlInfo
-    }
-    if (sp == 123 || dp == 123) {
-      val ntpInfo = dissectNtp(d, off + 8, math.min(off + 8 + payLen, d.length), v, protos)
-      if (ntpInfo != null) return ntpInfo
-    }
-    if (sp == 443 || dp == 443 || conv.quic) {
-      val quicInfo = dissectQuic(d, off + 8, math.min(off + 8 + payLen, d.length), conv, v, protos)
-      if (quicInfo != null) return quicInfo
-    }
-    // DTLS: port-free heuristic — the version magic is distinctive
-    {
-      val dtlsInfo = dissectDtls(d, off + 8, math.min(off + 8 + payLen, d.length), v, protos)
-      if (dtlsInfo != null) return dtlsInfo
-    }
-    if (sp == 2055 || dp == 2055 || sp == 9995 || dp == 9995 ||
-        sp == 4739 || dp == 4739) {
-      val nfInfo = dissectNetflow(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (nfInfo != null) return nfInfo
-    }
-    if (sp == 6343 || dp == 6343) {
-      val sfInfo = dissectSflow(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (sfInfo != null) return sfInfo
-    }
-    if (sp == 3784 || dp == 3784) {
-      val bfdInfo = dissectBfd(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (bfdInfo != null) return bfdInfo
-    }
-    if (sp == 520 || dp == 520) {
-      val ripInfo = dissectRip(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (ripInfo != null) return ripInfo
-    }
-    if (sp == 1985 || dp == 1985) {
-      val hsrpInfo = dissectHsrp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (hsrpInfo != null) return hsrpInfo
-    }
-    if (sp == 67 || dp == 67 || sp == 68 || dp == 68) {
-      val dhcpInfo = dissectDhcp(d, off + 8, math.min(off + 8 + payLen, d.length), v, protos)
-      if (dhcpInfo != null) return dhcpInfo
-    }
-    if (sp == 5060 || dp == 5060) {
-      val sipInfo = dissectSip(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos, tracker)
-      if (sipInfo != null) return sipInfo
-    }
-    if (sp == 88 || dp == 88) {
-      val krbInfo = dissectKrb5(d, off + 8,
-        math.min(payLen, d.length - off - 8), overTcp = false, v, protos)
-      if (krbInfo != null) return krbInfo
-    }
-    if (sp == 161 || dp == 161 || sp == 162 || dp == 162) {
-      val snmpInfo = dissectSnmp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (snmpInfo != null) return snmpInfo
-    }
-    if (sp == 2049 || dp == 2049) {
-      val nfsInfo = dissectRpcNfs(d, off + 8, math.min(payLen, d.length - off - 8),
-        overTcp = false, v, protos, tracker)
-      if (nfsInfo != null) return nfsInfo
-    }
-    if (sp == 1812 || dp == 1812 || sp == 1813 || dp == 1813 ||
-      sp == 1645 || dp == 1645 || sp == 1646 || dp == 1646) {
-      val radInfo = dissectRadius(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (radInfo != null) return radInfo
-    }
-    if (sp == 1900 || dp == 1900) {
-      val ssdpInfo = dissectSsdp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (ssdpInfo != null) return ssdpInfo
-    }
-    if (sp == 514 || dp == 514) {
-      val sysInfo = dissectSyslog(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (sysInfo != null) return sysInfo
-    }
-    if (sp == 9 || dp == 9) {
-      val wolInfo = dissectWol(d, off + 8,
-        off + 8 + math.min(payLen, d.length - off - 8), v, protos)
-      if (wolInfo != null) return wolInfo
-    }
-    // GigE Vision Control Protocol (UDP 3956): command packets carry the
-    // 0x42 magic key; acks from port 3956 lead with a status word
-    if ((sp == 3956 || dp == 3956) && payLen >= 8 && off + 16 <= d.length) {
-      if (u8(d, off + 8) == 0x42) {
-        protos += "gvcp"
-        val cmd = u16(d, off + 10)
-        v("gvcp.command") = cmd.toLong
-        return f"GVCP CMD 0x$cmd%04x"
-      } else if (sp == 3956) {
-        protos += "gvcp"
-        val status = u16(d, off + 8)
-        val cmd = u16(d, off + 10)
-        v("gvcp.command") = cmd.toLong
-        v("gvcp.status") = status.toLong
-        return f"GVCP ACK 0x$cmd%04x status 0x$status%04x"
-      }
-    }
-    // BACnet/IP (UDP 47808 = 0xBAC0): BVLC → NPDU → APDU
-    if ((sp == 47808 || dp == 47808) && payLen >= 4) {
-      val bacInfo = dissectBacnet(d, off + 8,
-        math.min(off + 8 + payLen, d.length), v, protos)
-      if (bacInfo != null) return bacInfo
-    }
-    // MGCP (RFC 3435): gateway side 2427, call-agent side 2727
-    if ((sp == 2427 || dp == 2427 || sp == 2727 || dp == 2727) && payLen >= 4) {
-      val mgcpInfo = dissectMgcp(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (mgcpInfo != null) return mgcpInfo
-    }
-    // SOME/IP (AUTOSAR, UDP 30490 service discovery / 30509 events)
-    if ((sp == 30490 || dp == 30490 || sp == 30509 || dp == 30509) && payLen >= 16) {
-      val someipInfo = dissectSomeip(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (someipInfo != null) return someipInfo
-    }
-    // GTPv2-C (3GPP TS 29.274, UDP 2123)
-    if ((sp == 2123 || dp == 2123) && payLen >= 8) {
-      val gtpInfo = dissectGtpv2(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (gtpInfo != null) return gtpInfo
-    }
-    // PFCP (3GPP TS 29.244, UDP 8805)
-    if ((sp == 8805 || dp == 8805) && payLen >= 8) {
-      val pfcpInfo = dissectPfcp(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (pfcpInfo != null) return pfcpInfo
-    }
-    // DoIP (ISO 13400-2, UDP 13400 — vehicle discovery)
-    if ((sp == 13400 || dp == 13400) && payLen >= 8) {
-      val doipInfo = dissectDoip(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (doipInfo != null) return doipInfo
-    }
-    // NetBIOS Datagram Service (RFC 1002 §4.4, UDP 138)
-    if ((sp == 138 || dp == 138) && payLen >= 10 && off + 18 <= d.length) {
-      val mt = u8(d, off + 8)
-      if (mt >= 0x10 && mt <= 0x16) {
-        protos += "nbdgm"
-        v("nbdgm.type") = mt.toLong
-        v("nbdgm.dgram_id") = u16(d, off + 10).toLong
-        // the Windows browser protocol rides a mailslot write to
-        // \MAILSLOT\BROWSE — pragmatic scan for the mailslot name; the
-        // command byte opens the data that follows the terminating NUL
-        if (mt == 0x11) {
-          val lim = math.min(off + 8 + payLen, d.length)
-          val pat = "\\MAILSLOT\\BROWSE".getBytes("ISO-8859-1")
-          var q = off + 18
-          while (q + pat.length + 1 < lim) {
-            if (d(q) == pat(0) && (1 until pat.length).forall(i => d(q + i) == pat(i))) {
-              val cmd = u8(d, q + pat.length + 1)
-              protos += "browser"
-              v("browser.command") = cmd.toLong
-              return cmd match {
-                case 0x01 => "Host Announcement"
-                case 0x02 => "Request Announcement"
-                case 0x08 => "Browser Election Request"
-                case 0x0c => "Domain/Workgroup Announcement"
-                case 0x0f => "Local Master Announcement"
-                case c => f"Browser 0x$c%02x"
-              }
-            }
-            q += 1
-          }
-        }
-        return mt match {
-          case 0x10 => "Direct_unique datagram"
-          case 0x11 => "Direct_group datagram"
-          case 0x12 => "Broadcast datagram"
-          case 0x13 => "Datagram error"
-          case _    => "Datagram query"
-        }
-      }
-    }
-    // BitTorrent DHT (KRPC over bencode, UDP 6881): top-level dict keys
-    // y (message kind) and q (query name)
-    if ((sp == 6881 || dp == 6881) && payLen >= 4 && off + 9 <= d.length &&
-      d(off + 8) == 'd') {
-      val info = dissectBtDht(d, off + 8,
-        math.min(off + 8 + payLen, d.length), v, protos)
-      if (info != null) return info
-    }
-    // the same swarm port carries uTP when the payload isn't bencoded
-    if (sp == 6881 || dp == 6881) {
-      val utpInfo = dissectBtUtp(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (utpInfo != null) return utpInfo
-    }
-    // OpenVPN (UDP 1194): opcode(5 bits) + key id(3); control packets
-    // carry a 64-bit session id
-    if ((sp == 1194 || dp == 1194) && payLen >= 1 && off + 9 <= d.length) {
-      val b = u8(d, off + 8)
-      val op = b >> 3
-      val name = openvpnOpcodeNames.getOrElse(op, null)
-      if (name != null) {
-        protos += "openvpn"
-        v("openvpn.type") = b.toLong
-        if (op != 6 && op != 9 && off + 17 <= d.length) {
-          v("openvpn.sessionid") =
-            (u32(d, off + 9) << 32) | u32(d, off + 13)
-          // control channel with an empty ack-id array: the message
-          // packet-id follows directly (with tls-auth the HMAC would sit
-          // between — undetectable without keys, so only the 0-array
-          // layout is claimed)
-          if (off + 22 <= d.length && u8(d, off + 17) == 0)
-            v("openvpn.mpid") = u32(d, off + 18)
-        }
-        return name
-      }
-    }
-    // NAT-PMP (RFC 6886, UDP 5351): version 0, opcode 0–2 request /
-    // 128–130 response (the +128 response convention)
-    if ((sp == 5351 || dp == 5351) && payLen >= 2 && off + 10 <= d.length &&
-      u8(d, off + 8) == 0) {
-      val op = u8(d, off + 9)
-      val name = (op & 0x7f) match {
-        case 0 => "External Address"
-        case 1 => "Map UDP"
-        case 2 => "Map TCP"
-        case _ => null
-      }
-      if (name != null) {
-        protos += "nat-pmp"
-        v("nat-pmp.version") = 0L
-        v("nat-pmp.opcode") = op.toLong
-        return s"$name ${if (op >= 128) "Response" else "Request"}"
-      }
-    }
-    if (sp == 69 || dp == 69) {
-      val tftpInfo = dissectTftp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (tftpInfo != null) {
-        // a request's CLIENT port identifies the transfer that follows on
-        // ephemeral ports (RFC 1350 §4: the server picks its own TID)
-        val client = if (dp == 69) sp else dp
-        if (tracker.tftpPorts.size < 256) tracker.tftpPorts += client
-        return tftpInfo
-      }
-    }
-    if (tracker.tftpPorts.contains(sp) || tracker.tftpPorts.contains(dp)) {
-      val tftpInfo = dissectTftp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (tftpInfo != null) return tftpInfo
-    }
-    if (tracker.rtpPorts.contains(sp) || tracker.rtpPorts.contains(dp)) {
-      val rtpInfo = dissectRtp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (rtpInfo != null) return rtpInfo
-    }
-    // RTCP rides the SDP-announced RTP port + 1 (RFC 3550 §11)
-    if (tracker.rtpPorts.contains(sp - 1) || tracker.rtpPorts.contains(dp - 1)) {
-      val rtcpInfo = dissectRtcp(d, off + 8, math.min(payLen, d.length - off - 8), v, protos)
-      if (rtcpInfo != null) return rtcpInfo
-    }
-    // VXLAN (RFC 7348): 8-byte header with the I flag, then an inner
-    // Ethernet frame dissected in nested (multi-occurrence) field mode
-    if ((sp == 4789 || dp == 4789) && payLen >= 8 && off + 16 <= d.length &&
-      (u8(d, off + 8) & 0x08) != 0) {
-      protos += "vxlan"
-      v("vxlan.flags") = u8(d, off + 8).toLong
-      v("vxlan.vni") =
-        ((u8(d, off + 12) << 16) | (u8(d, off + 13) << 8) | u8(d, off + 14)).toLong
-      val wasNested = v.nested
-      v.nested = true
-      val inner =
-        try dissectEthFrom(d, off + 16, v, protos, tracker, wanted)
-        finally v.nested = wasNested
-      return if (inner != null) inner else "VXLAN"
-    }
-    // TZSP (TaZmen Sniffer Protocol, UDP 37008): version 1 header, tagged
-    // fields to TAG_END, then the encapsulated frame (encap 1 = Ethernet),
-    // dissected in nested multi-occurrence mode like the other tunnels
-    if ((sp == 37008 || dp == 37008) && payLen >= 4 && off + 12 <= d.length &&
-      u8(d, off + 8) == 1) {
-      val typ = u8(d, off + 9)
-      val encap = u16(d, off + 10)
-      if (typ <= 5) {
-        protos += "tzsp"
-        v("tzsp.version") = 1L
-        v("tzsp.type") = typ.toLong
-        v("tzsp.encap") = encap.toLong
-        // walk the tag list: 0x00 padding, 0x01 end, else (tag, len, data)
-        var p = off + 12
-        val lim = math.min(off + 8 + payLen, d.length)
-        var ended = false
-        while (!ended && p < lim) {
-          u8(d, p) match {
-            case 0 => p += 1
-            case 1 => p += 1; ended = true
-            case _ =>
-              if (p + 2 > lim) { p = lim }
-              else p += 2 + u8(d, p + 1)
-          }
-        }
-        if (typ == 4) return "TZSP Keepalive"
-        if (ended && encap == 1 && p + 14 <= lim) {
-          val wasNested = v.nested
-          v.nested = true
-          val inner =
-            try dissectEthFrom(d, p, v, protos, tracker, wanted)
-            finally v.nested = wasNested
-          return if (inner != null) inner else "TZSP"
-        }
-        return "TZSP"
-      }
-    }
-    // Geneve (RFC 8926): Ver(2)+OptLen(6) | flags | Protocol Type |
-    // VNI(24)+rsvd, then OptLen×4 bytes of TLV options, then the inner
-    // frame per the declared protocol type (0x6558 = bridged Ethernet)
-    if ((sp == 6081 || dp == 6081) && payLen >= 8 && off + 16 <= d.length &&
-      (u8(d, off + 8) >> 6) == 0) {
-      val optLen = (u8(d, off + 8) & 0x3f) * 4
-      val ptype = u16(d, off + 10)
-      val innerOff = off + 16 + optLen
-      if (innerOff <= d.length) {
-        protos += "geneve"
-        v("geneve.version") = ((u8(d, off + 8) >> 6) & 0x3).toLong
-        v("geneve.proto_type") = ptype.toLong
-        v("geneve.vni") =
-          ((u8(d, off + 12) << 16) | (u8(d, off + 13) << 8) | u8(d, off + 14)).toLong
-        val wasNested = v.nested
-        v.nested = true
-        val inner =
-          try ptype match {
-            case 0x6558 => dissectEthFrom(d, innerOff, v, protos, tracker, wanted)
-            case 0x0800 => dissectIpv4(d, innerOff, v, protos, tracker, wanted)
-            case 0x86dd => dissectIpv6(d, innerOff, v, protos, tracker, wanted)
-            case _      => null
-          } finally v.nested = wasNested
-        return if (inner != null) inner else "Geneve"
-      }
-    }
-    if (sp >= 7400 && sp < 7900 || dp >= 7400 && dp < 7900) {
-      // domain id comes from whichever port is RTPS-side: on a
-      // server->client reply the dst port is an ephemeral one and would
-      // yield a bogus domain (ADVICE r8)
-      val rtpsPort = if (dp >= 7400 && dp < 7900) dp else sp
-      val rtpsInfo = dissectRtps(d, off + 8, math.min(payLen, d.length - off - 8),
-        rtpsPort, v, protos)
-      if (rtpsInfo != null) return rtpsInfo
-    }
-    if (sp == 30001 || dp == 30001) {
-      val moldInfo = dissectMoldudp64(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (moldInfo != null) return moldInfo
-    }
-    if (sp == 9300 || dp == 9300) {
-      val srtInfo = dissectSrt(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (srtInfo != null) return srtInfo
-    }
-    if (sp == 3130 || dp == 3130) {
-      val icpInfo = dissectIcp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (icpInfo != null) return icpInfo
-    }
-    if (sp == 3544 || dp == 3544) {
-      val trdInfo = dissectTeredo(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos, tracker, wanted)
-      if (trdInfo != null) return trdInfo
-    }
-    if (sp == 521 || dp == 521) {
-      val rnInfo = dissectRipng(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (rnInfo != null) return rnInfo
-    }
-    if (sp == 2048 || dp == 2048) {
-      val wcInfo = dissectWccp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (wcInfo != null) return wcInfo
-    }
-    if (sp == 427 || dp == 427) {
-      val slInfo = dissectSrvloc(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (slInfo != null) return slInfo
-    }
-    if (sp == 2944 || dp == 2944) {
-      val mgInfo = dissectMegaco(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (mgInfo != null) return mgInfo
-    }
-    if (sp == 2442 || dp == 2442) {
-      val msInfo = dissectMqttsn(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (msInfo != null) return msInfo
-    }
-    if (sp == 9600 || dp == 9600) {
-      val fnInfo = dissectFins(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (fnInfo != null) return fnInfo
-    }
-    if (sp == 3671 || dp == 3671) {
-      val kxInfo = dissectKnxnetip(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (kxInfo != null) return kxInfo
-    }
-    if (sp == 5678 && dp == 5678) {
-      val mnInfo = dissectMndp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (mnInfo != null) return mnInfo
-    }
-    // VXLAN-GPE (UDP 4790): VXLAN header with the P bit — next-protocol
-    // discriminates the inner layer instead of assuming Ethernet
-    if ((sp == 4790 || dp == 4790) && payLen >= 8 && off + 16 <= d.length &&
-      (u8(d, off + 8) & 0x08) != 0) {
-      val flags = u8(d, off + 8)
-      protos += "vxlan"
-      v("vxlan.flags") = flags.toLong
-      v("vxlan.vni") =
-        ((u8(d, off + 12) << 16) | (u8(d, off + 13) << 8) | u8(d, off + 14)).toLong
-      val nextProto = if ((flags & 0x04) != 0) u8(d, off + 11) else 3
-      if ((flags & 0x04) != 0) v("vxlan.next_proto") = u8(d, off + 11).toLong
-      val wasNested = v.nested
-      v.nested = true
-      val inner =
-        try nextProto match {
-          case 1 => dissectIpv4(d, off + 16, v, protos, tracker, wanted)
-          case 2 => dissectIpv6(d, off + 16, v, protos, tracker, wanted)
-          case 3 => dissectEthFrom(d, off + 16, v, protos, tracker, wanted)
-          case 4 => dissectNsh(d, off + 16, v, protos, tracker, wanted)
-          case _ => null
-        } finally v.nested = wasNested
-      return if (inner != null) inner else "VXLAN-GPE"
-    }
-    // MPLS-over-UDP (RFC 7510, UDP 6635): the label stack + payload ride
-    // directly in the datagram
-    if ((sp == 6635 || dp == 6635) && payLen >= 8 && off + 12 <= d.length) {
-      val wasNested = v.nested
-      v.nested = true
-      val inner =
-        try dissectMpls(d, off + 8, v, protos, tracker, wanted)
-        finally v.nested = wasNested
-      if (inner != null) return inner
-    }
-    if (sp == 698 || dp == 698) {
-      val olInfo = dissectOlsr(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (olInfo != null) return olInfo
-    }
-    if (sp == 646 || dp == 646) {
-      val ldInfo = dissectLdp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (ldInfo != null) return ldInfo
-    }
-    if (sp == 5094 || dp == 5094) {
-      val hiInfo = dissectHartIp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (hiInfo != null) return hiInfo
-    }
-    if (sp == 623 || dp == 623) {
-      val rmInfo = dissectRmcp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (rmInfo != null) return rmInfo
-    }
-    if (sp == 17754 || dp == 17754) {
-      val zpInfo = dissectZep(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (zpInfo != null) return zpInfo
-    }
-    if (sp == 25826 || dp == 25826) {
-      val cdInfo = dissectCollectd(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (cdInfo != null) return cdInfo
-    }
-    if (sp == 4729 || dp == 4729) {
-      val gtInfo = dissectGsmtap(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (gtInfo != null) return gtInfo
-    }
-    if (sp == 37 || dp == 37) {
-      val tmInfo = dissectTime(d, off + 8, math.min(payLen, d.length - off - 8),
-        fromServer = sp == 37, v, protos)
-      if (tmInfo != null) return tmInfo
-    }
-    if (sp == 19 || dp == 19) {
-      val cgInfo = dissectChargen(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (cgInfo != null) return cgInfo
-    }
-    if (sp == 7 || dp == 7) {
-      val ecInfo = dissectEcho(d, off + 8, math.min(payLen, d.length - off - 8),
-        fromServer = sp == 7, v, protos)
-      if (ecInfo != null) return ecInfo
-    }
-    if (sp == 5351 || dp == 5351) {
-      val pcInfo = dissectPcp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (pcInfo != null) return pcInfo
-    }
-    if (sp == 496 || dp == 496) {
-      val arInfo = dissectAutoRp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (arInfo != null) return arInfo
-    }
-    if (sp == 1234 || dp == 1234) {
-      val tsInfo = dissectMp2t(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (tsInfo != null) return tsInfo
-    }
-    if (sp == 111 || dp == 111) {
-      val pmInfo = dissectPortmap(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (pmInfo != null) return pmInfo
-    }
-    if (sp == 4569 || dp == 4569) {
-      val ixInfo = dissectIax2(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (ixInfo != null) return ixInfo
-    }
-    if (sp == 177 || dp == 177) {
-      val xdInfo = dissectXdmcp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (xdInfo != null) return xdInfo
-    }
-    if (sp == 6454 || dp == 6454) {
-      val anInfo = dissectArtnet(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (anInfo != null) return anInfo
-    }
-    if (sp == 3000 || dp == 3000) {
-      val dsInfo = dissectDis(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (dsInfo != null) return dsInfo
-    }
-    if (sp == 7000 || dp == 7000) {
-      val rxInfo = dissectRx(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (rxInfo != null) return rxInfo
-    }
-    if (sp == 19132 || dp == 19132) {
-      val rkInfo = dissectRaknet(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (rkInfo != null) return rkInfo
-    }
-    if (sp == 3222 || dp == 3222) {
-      val glInfo = dissectGlbp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (glInfo != null) return glInfo
-    }
-    if (sp == 464 || dp == 464) {
-      val kpInfo = dissectKpasswd(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (kpInfo != null) return kpInfo
-    }
-    if (sp == 631 || dp == 631) {
-      val cuInfo = dissectCups(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (cuInfo != null) return cuInfo
-    }
-    if (sp == 9000 || dp == 9000) {
-      val udInfo = dissectUdt(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (udInfo != null) return udInfo
-    }
-    if (sp == 635 || dp == 635) {
-      val mtInfo = dissectMount(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (mtInfo != null) return mtInfo
-    }
-    if (sp == 834 || dp == 834) {
-      val ypInfo = dissectYpserv(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (ypInfo != null) return ypInfo
-    }
-    if (sp == 654 || dp == 654) {
-      val aoInfo = dissectAodv(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (aoInfo != null) return aoInfo
-    }
-    if (sp == 854 || dp == 854) {
-      val dlInfo = dissectDlep(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (dlInfo != null) return dlInfo
-    }
-    if (sp == 5007 || dp == 5007) {
-      val mlInfo = dissectMelsec(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (mlInfo != null) return mlInfo
-    }
-    if (sp == 20202 || dp == 20202) {
-      val gvInfo = dissectGvsp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (gvInfo != null) return gvInfo
-    }
-    if (sp == 9200 || dp == 9200) {
-      val wsInfo = dissectWsp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (wsInfo != null) return wsInfo
-    }
-    if (sp == 443 || dp == 443) {
-      val gqInfo = dissectGquic(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (gqInfo != null) return gqInfo
-    }
-    if (sp == 8600 || dp == 8600) {
-      val axInfo = dissectAsterix(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (axInfo != null) return axInfo
-    }
-    if (sp == 8004 || dp == 8004) {
-      val cgInfo = dissectCigi(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (cgInfo != null) return cgInfo
-    }
-    if (sp == 6004 || dp == 6004) {
-      val t3Info = dissectT38(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (t3Info != null) return t3Info
-    }
-    if (sp == 4342 || dp == 4342) {
-      val lcInfo = dissectLispControl(d, off + 8,
-        math.min(payLen, d.length - off - 8), v, protos)
-      if (lcInfo != null) return lcInfo
-    }
-    if (sp == 4045 || dp == 4045) {
-      val nlInfo = dissectNlm(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (nlInfo != null) return nlInfo
-    }
-    if (sp == 30002 || dp == 30002) {
-      val zrInfo = dissectZrtp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (zrInfo != null) return zrInfo
-    }
-    if (sp == 9201 || dp == 9201) {
-      val wtInfo = dissectWtp(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (wtInfo != null) return wtInfo
-    }
-    // WTLS rides the secure WAP port (9202): record content type
-    if ((sp == 9202 || dp == 9202) && payLen >= 3 && off + 9 <= d.length) {
-      val rt = u8(d, off + 8) & 0x0f
-      if (rt >= 1 && rt <= 4) {
-        protos += "wtls"
-        v("wtls.record.type") = rt.toLong
-        return rt match {
-          case 1 => "WTLS Change Cipher Spec"
-          case 2 => "WTLS Alert"
-          case 3 => "WTLS Handshake"
-          case _ => "WTLS Application Data"
-        }
-      }
-    }
-    if (sp == 5246 || dp == 5246) {
-      val cwInfo = dissectCapwap(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (cwInfo != null) return cwInfo
-    }
-    // LISP data encapsulation (RFC 6830, UDP 4341): 8-byte header, then
-    // the inner IP packet — version nibble discriminates v4/v6
-    if ((sp == 4341 || dp == 4341) && payLen >= 9 && off + 17 <= d.length) {
-      val flags = u8(d, off + 8)
-      protos += "lisp-data"
-      v("lisp-data.flags") = flags.toLong
-      if ((flags & 0x80) != 0) v("lisp-data.nonce") = u24(d, off + 9).toLong
-      // I-bit: the second word's top 24 bits carry the instance id and
-      // only the low byte remains a (reduced) locator-status-bitmap
-      if ((flags & 0x08) != 0) v("lisp-data.iid") = u24(d, off + 12).toLong
-      else v("lisp-data.lsb") = u32(d, off + 12)
-      val wasNested = v.nested
-      v.nested = true
-      val inner =
-        try u8(d, off + 16) >> 4 match {
-          case 4 => dissectIpv4(d, off + 16, v, protos, tracker, wanted)
-          case 6 => dissectIpv6(d, off + 16, v, protos, tracker, wanted)
-          case _ => null
-        } finally v.nested = wasNested
-      return if (inner != null) inner else "LISP Data"
-    }
-    if (sp == 6696 || dp == 6696) {
-      val bbInfo = dissectBabel(d, off + 8, math.min(payLen, d.length - off - 8),
-        v, protos)
-      if (bbInfo != null) return bbInfo
-    }
-    if (!wanted.info) ""
+    val info = udpApps.dispatch(new Seg(d, off + 8, math.min(payLen, d.length - off - 8), payLen,
+      sp, dp, null, 0, conv, v, protos, tracker, wanted))
+    if (info != null) info
+    else if (!wanted.info) ""
     else if (wanted.infoBytes) {
       val ib = tracker.infoBuf
       ib.reset()
@@ -3690,6 +2944,470 @@ object Dissect {
       InfoInBuf
     } else s"$sp → $dp Len=$payLen"
   }
+
+  /** Verifies a fully captured IPv4 datagram's checksum over the
+    * pseudo-header, whose address words are read from the IP header
+    * (`ip` at `srcAt`: source, then destination). */
+  private def udpChecksum(d: Array[Byte], off: Int, len: Int, ckStored: Int,
+      ip: Array[Byte], srcAt: Int, v: FieldVec): Unit = {
+    var sum = u16(ip, srcAt).toLong + u16(ip, srcAt + 2) + u16(ip, srcAt + 4) +
+      u16(ip, srcAt + 6) + 17 + len
+    // checksum-offload detection: a transmitting stack leaves the
+    // UNCOMPLEMENTED pseudo-header sum in the field for the NIC to
+    // finish; seeing exactly that value means a partial checksum
+    var ps = sum
+    while ((ps >> 16) != 0) ps = (ps & 0xffff) + (ps >> 16)
+    if (ckStored == ps.toInt)
+      v("udp.checksum.partial") = "Partial (pseudo header checksum)"
+    var i = off
+    val udpEnd = off + len
+    while (i + 1 < udpEnd) {
+      if (i != off + 6) sum += u16(d, i)
+      i += 2
+    }
+    if (i < udpEnd) sum += u8(d, i) << 8
+    while ((sum >> 16) != 0) sum = (sum & 0xffff) + (sum >> 16)
+    val calc0 = (~sum).toInt & 0xffff
+    val calc = if (calc0 == 0) 0xffff else calc0
+    v("udp.checksum_calculated") = calc.toLong
+    if (calc != ckStored) v("udp.checksum.bad") = "Bad checksum"
+    v("udp.checksum.status") = if (calc == ckStored) 1L else 0L
+  }
+
+  /** NetBIOS Datagram Service (RFC 1002 §4.4, UDP 138). */
+  private def udpNbdgm(s: Seg): String = {
+    val d = s.b; val o = s.o
+    if (s.plen < 10 || o + 10 > d.length) return null
+    val mt = u8(d, o)
+    if (mt < 0x10 || mt > 0x16) return null
+    s.p += "nbdgm"
+    s.v("nbdgm.type") = mt.toLong
+    s.v("nbdgm.dgram_id") = u16(d, o + 2).toLong
+    // the Windows browser protocol rides a mailslot write to
+    // \MAILSLOT\BROWSE — pragmatic scan for the mailslot name; the
+    // command byte opens the data that follows the terminating NUL
+    if (mt == 0x11) {
+      val lim = s.end
+      val pat = "\\MAILSLOT\\BROWSE".getBytes("ISO-8859-1")
+      var q = o + 10
+      while (q + pat.length + 1 < lim) {
+        if (d(q) == pat(0) && (1 until pat.length).forall(i => d(q + i) == pat(i))) {
+          val cmd = u8(d, q + pat.length + 1)
+          s.p += "browser"
+          s.v("browser.command") = cmd.toLong
+          return cmd match {
+            case 0x01 => "Host Announcement"
+            case 0x02 => "Request Announcement"
+            case 0x08 => "Browser Election Request"
+            case 0x0c => "Domain/Workgroup Announcement"
+            case 0x0f => "Local Master Announcement"
+            case c => f"Browser 0x$c%02x"
+          }
+        }
+        q += 1
+      }
+    }
+    mt match {
+      case 0x10 => "Direct_unique datagram"
+      case 0x11 => "Direct_group datagram"
+      case 0x12 => "Broadcast datagram"
+      case 0x13 => "Datagram error"
+      case _    => "Datagram query"
+    }
+  }
+
+  /** OpenVPN (UDP 1194): opcode(5 bits) + key id(3); control packets
+    * carry a 64-bit session id. */
+  private def udpOpenvpn(s: Seg): String = {
+    val d = s.b; val o = s.o
+    if (s.plen < 1 || o + 1 > d.length) return null
+    val b = u8(d, o)
+    val op = b >> 3
+    val name = openvpnOpcodeNames.getOrElse(op, null)
+    if (name != null) {
+      s.p += "openvpn"
+      s.v("openvpn.type") = b.toLong
+      if (op != 6 && op != 9 && o + 9 <= d.length) {
+        s.v("openvpn.sessionid") = (u32(d, o + 1) << 32) | u32(d, o + 5)
+        // control channel with an empty ack-id array: the message
+        // packet-id follows directly (with tls-auth the HMAC would sit
+        // between — undetectable without keys, so only the 0-array
+        // layout is claimed)
+        if (o + 14 <= d.length && u8(d, o + 9) == 0)
+          s.v("openvpn.mpid") = u32(d, o + 10)
+      }
+    }
+    name
+  }
+
+  /** TZSP (TaZmen Sniffer Protocol, UDP 37008): version 1 header, tagged
+    * fields to TAG_END, then the encapsulated frame (encap 1 = Ethernet),
+    * dissected in nested multi-occurrence mode like the other tunnels. */
+  private def udpTzsp(s: Seg): String = {
+    val d = s.b; val o = s.o
+    if (s.plen < 4 || o + 4 > d.length || u8(d, o) != 1) return null
+    val typ = u8(d, o + 1)
+    val encap = u16(d, o + 2)
+    if (typ > 5) return null
+    s.p += "tzsp"
+    s.v("tzsp.version") = 1L
+    s.v("tzsp.type") = typ.toLong
+    s.v("tzsp.encap") = encap.toLong
+    // walk the tag list: 0x00 padding, 0x01 end, else (tag, len, data)
+    var p = o + 4
+    val lim = s.end
+    var ended = false
+    while (!ended && p < lim) {
+      u8(d, p) match {
+        case 0 => p += 1
+        case 1 => p += 1; ended = true
+        case _ =>
+          if (p + 2 > lim) { p = lim }
+          else p += 2 + u8(d, p + 1)
+      }
+    }
+    if (typ == 4) "TZSP Keepalive"
+    else if (ended && encap == 1 && p + 14 <= lim) {
+      val inner = nestedIn(s.v)(dissectEthFrom(d, p, s.v, s.p, s.t, s.w))
+      if (inner != null) inner else "TZSP"
+    } else "TZSP"
+  }
+
+  /** Geneve (RFC 8926): Ver(2)+OptLen(6) | flags | Protocol Type |
+    * VNI(24)+rsvd, then OptLen×4 bytes of TLV options, then the inner
+    * frame per the declared protocol type (0x6558 = bridged Ethernet). */
+  private def udpGeneve(s: Seg): String = {
+    val d = s.b; val o = s.o
+    if (s.plen < 8 || o + 8 > d.length || (u8(d, o) >> 6) != 0) return null
+    val optLen = (u8(d, o) & 0x3f) * 4
+    val ptype = u16(d, o + 2)
+    val innerOff = o + 8 + optLen
+    if (innerOff > d.length) return null
+    s.p += "geneve"
+    s.v("geneve.version") = ((u8(d, o) >> 6) & 0x3).toLong
+    s.v("geneve.proto_type") = ptype.toLong
+    s.v("geneve.vni") = u24(d, o + 4).toLong
+    val inner = nestedIn(s.v)(ptype match {
+      case 0x6558 => dissectEthFrom(d, innerOff, s.v, s.p, s.t, s.w)
+      case 0x0800 => dissectIpv4(d, innerOff, s.v, s.p, s.t, s.w)
+      case 0x86dd => dissectIpv6(d, innerOff, s.v, s.p, s.t, s.w)
+      case _      => null
+    })
+    if (inner != null) inner else "Geneve"
+  }
+
+  /** VXLAN-GPE (UDP 4790): VXLAN header with the P bit — next-protocol
+    * discriminates the inner layer instead of assuming Ethernet. */
+  private def udpVxlanGpe(s: Seg): String = {
+    val d = s.b; val o = s.o
+    if (s.plen < 8 || o + 8 > d.length || (u8(d, o) & 0x08) == 0) return null
+    val flags = u8(d, o)
+    s.p += "vxlan"
+    s.v("vxlan.flags") = flags.toLong
+    s.v("vxlan.vni") = u24(d, o + 4).toLong
+    val nextProto = if ((flags & 0x04) != 0) u8(d, o + 3) else 3
+    if ((flags & 0x04) != 0) s.v("vxlan.next_proto") = u8(d, o + 3).toLong
+    val inner = nestedIn(s.v)(nextProto match {
+      case 1 => dissectIpv4(d, o + 8, s.v, s.p, s.t, s.w)
+      case 2 => dissectIpv6(d, o + 8, s.v, s.p, s.t, s.w)
+      case 3 => dissectEthFrom(d, o + 8, s.v, s.p, s.t, s.w)
+      case 4 => dissectNsh(d, o + 8, s.v, s.p, s.t, s.w)
+      case _ => null
+    })
+    if (inner != null) inner else "VXLAN-GPE"
+  }
+
+  /** LISP data encapsulation (RFC 6830, UDP 4341): 8-byte header, then
+    * the inner IP packet — version nibble discriminates v4/v6. */
+  private def udpLispData(s: Seg): String = {
+    val d = s.b; val o = s.o
+    if (s.plen < 9 || o + 9 > d.length) return null
+    val flags = u8(d, o)
+    s.p += "lisp-data"
+    s.v("lisp-data.flags") = flags.toLong
+    if ((flags & 0x80) != 0) s.v("lisp-data.nonce") = u24(d, o + 1).toLong
+    // I-bit: the second word's top 24 bits carry the instance id and
+    // only the low byte remains a (reduced) locator-status-bitmap
+    if ((flags & 0x08) != 0) s.v("lisp-data.iid") = u24(d, o + 4).toLong
+    else s.v("lisp-data.lsb") = u32(d, o + 4)
+    val inner = nestedIn(s.v)(u8(d, o + 8) >> 4 match {
+      case 4 => dissectIpv4(d, o + 8, s.v, s.p, s.t, s.w)
+      case 6 => dissectIpv6(d, o + 8, s.v, s.p, s.t, s.w)
+      case _ => null
+    })
+    if (inner != null) inner else "LISP Data"
+  }
+
+  /** UDP application dissectors in try order; the heuristics (MAC-LTE
+    * framing, QUIC conversations, DTLS, TFTP/RTP/RTCP ports learned from
+    * earlier packets) sit at their place in that order. */
+  private val udpApps = new PortTable(
+    on(53)(s => dissectDns(s.b, s.o, s.end, s.v, s.p)),
+    on(5353)(s => dissectDns(s.b, s.o, s.end, s.v, s.p, protoName = "mdns")),
+    // LLMNR (RFC 4795, UDP 5355) is DNS wire format — Wireshark routes it
+    // through the DNS dissector too (dns.* fields under an llmnr layer)
+    on(5355)(s => dissectDns(s.b, s.o, s.end, s.v, s.p, protoName = "llmnr")),
+    on(137)(s => dissectNbns(s.b, s.o, s.end, s.v, s.p)),
+    // same port, no RFC 5389 magic cookie → classic STUN (RFC 3489)
+    on(3478) { s =>
+      val info = dissectStun(s.b, s.o, s.n, s.v, s.p)
+      if (info != null) info else dissectClassicStun(s.b, s.o, s.n, s.v, s.p)
+    },
+    on(319, 320)(s => dissectPtp(s.b, s.o, s.n, s.v, s.p)),
+    on(546, 547)(s => dissectDhcpv6(s.b, s.o, s.n, s.v, s.p)),
+    on(51820)(s => dissectWireguard(s.b, s.o, s.n, s.v, s.p)),
+    on(2152)(s => dissectGtpU(s.b, s.o, s.n, s.v, s.p, s.t, s.w)),
+    on(500, 4500)(s => dissectIkev2(s.b, s.o, s.n, s.v, s.p)),
+    // NAT-T (RFC 3948): on 4500, a non-zero first word is a UDP-
+    // encapsulated ESP packet's SPI (zero would be the IKE marker)
+    on(4500) { s =>
+      if (s.plen >= 8 && s.o + 8 <= s.b.length && u32(s.b, s.o) != 0L) {
+        s.p += "esp"
+        dissectEsp(s.b, s.o, s.end, s.v)
+      } else null
+    },
+    on(1701)(s => dissectL2tp(s.b, s.o, s.n, s.v, s.p)),
+    on(5683)(s => dissectCoap(s.b, s.o, s.n, s.v, s.p)),
+    on(2269)(s => dissectMikey(s.b, s.o, s.n, s.v, s.p)),
+    on(5070)(s => dissectBfcp(s.b, s.o, s.n, s.v, s.p)),
+    on(1719)(s => dissectH225Ras(s.b, s.o, s.n, s.v, s.p)),
+    on(2945)(s => dissectH248Bin(s.b, s.o, s.n, s.v, s.p)),
+    // PROFINET IO context manager (UDP 34964): IODConnect rides
+    // connectionless DCE/RPC v4 (C706 CL header, 80 bytes), then the
+    // NDR args envelope and the big-endian PNIO block list
+    on(34964)(s => dissectPnioCm(s.b, s.o, s.n, s.v, s.p)),
+    // MLE (Thread Mesh Link Establishment, UDP 19788): only the
+    // UNSECURED shape is claimable from bytes — security suite 255
+    // means no security header, and the command byte follows directly
+    on(19788) { s =>
+      val cmd =
+        if (s.plen >= 2 && s.o + 2 <= s.b.length && u8(s.b, s.o) == 255) u8(s.b, s.o + 1) else -1
+      if (cmd < 0 || cmd > 16) null
+      else {
+        s.p += "mle"
+        s.v("mle.cmd") = cmd.toLong
+        cmd match {
+          case 0 => "Link Request"; case 1 => "Link Accept"
+          case 4 => "Advertisement"; case 10 => "Child ID Request"
+          case c => s"MLE command $c"
+        }
+      }
+    },
+    // Gb over IP (3GPP TS 48.016): the NS layer on UDP 23000 whose
+    // NS-UNITDATA PDUs carry BSSGP
+    on(23000)(s => dissectNsBssgp(s.b, s.o, s.n, s.v, s.p)),
+    // MAC-LTE framed over UDP (Wireshark's packet-mac-lte.h UDP framing):
+    // the payload leads with the "mac-lte" magic on any port
+    on() { s =>
+      val d = s.b; val o = s.o
+      if (s.plen >= 10 && o + 7 <= d.length &&
+          d(o) == 'm' && d(o + 1) == 'a' && d(o + 2) == 'c' && d(o + 3) == '-' &&
+          d(o + 4) == 'l' && d(o + 5) == 't' && d(o + 6) == 'e')
+        dissectMacLte(d, o + 7, s.end, s.v, s.p)
+      else null
+    },
+    on(123)(s => dissectNtp(s.b, s.o, s.end, s.v, s.p)),
+    on() { s =>
+      if (s.sp == 443 || s.dp == 443 || s.udp.quic) dissectQuic(s.b, s.o, s.end, s.udp, s.v, s.p)
+      else null
+    },
+    // DTLS: port-free heuristic — the version magic is distinctive
+    on()(s => dissectDtls(s.b, s.o, s.end, s.v, s.p)),
+    on(2055, 9995, 4739)(s => dissectNetflow(s.b, s.o, s.n, s.v, s.p)),
+    on(6343)(s => dissectSflow(s.b, s.o, s.n, s.v, s.p)),
+    on(3784)(s => dissectBfd(s.b, s.o, s.n, s.v, s.p)),
+    on(520)(s => dissectRip(s.b, s.o, s.n, s.v, s.p)),
+    on(1985)(s => dissectHsrp(s.b, s.o, s.n, s.v, s.p)),
+    on(67, 68)(s => dissectDhcp(s.b, s.o, s.end, s.v, s.p)),
+    on(5060)(s => dissectSip(s.b, s.o, s.n, s.v, s.p, s.t)),
+    on(88)(s => dissectKrb5(s.b, s.o, s.n, overTcp = false, s.v, s.p)),
+    on(161, 162)(s => dissectSnmp(s.b, s.o, s.n, s.v, s.p)),
+    on(2049)(s => dissectRpcNfs(s.b, s.o, s.n, overTcp = false, s.v, s.p, s.t)),
+    on(1812, 1813, 1645, 1646)(s => dissectRadius(s.b, s.o, s.n, s.v, s.p)),
+    on(1900)(s => dissectSsdp(s.b, s.o, s.n, s.v, s.p)),
+    on(514)(s => dissectSyslog(s.b, s.o, s.n, s.v, s.p)),
+    on(9)(s => dissectWol(s.b, s.o, s.end, s.v, s.p)),
+    // GigE Vision Control Protocol (UDP 3956): command packets carry the
+    // 0x42 magic key; acks from port 3956 lead with a status word
+    on(3956) { s =>
+      if (s.plen < 8 || s.o + 8 > s.b.length) null
+      else if (u8(s.b, s.o) == 0x42) {
+        s.p += "gvcp"
+        val cmd = u16(s.b, s.o + 2)
+        s.v("gvcp.command") = cmd.toLong
+        f"GVCP CMD 0x$cmd%04x"
+      } else if (s.sp == 3956) {
+        s.p += "gvcp"
+        val status = u16(s.b, s.o)
+        val cmd = u16(s.b, s.o + 2)
+        s.v("gvcp.command") = cmd.toLong
+        s.v("gvcp.status") = status.toLong
+        f"GVCP ACK 0x$cmd%04x status 0x$status%04x"
+      } else null
+    },
+    // BACnet/IP (UDP 47808 = 0xBAC0): BVLC → NPDU → APDU
+    on(47808)(s => if (s.plen >= 4) dissectBacnet(s.b, s.o, s.end, s.v, s.p) else null),
+    // MGCP (RFC 3435): gateway side 2427, call-agent side 2727
+    on(2427, 2727)(s => if (s.plen >= 4) dissectMgcp(s.b, s.o, s.n, s.v, s.p) else null),
+    // SOME/IP (AUTOSAR, UDP 30490 service discovery / 30509 events)
+    on(30490, 30509)(s => if (s.plen >= 16) dissectSomeip(s.b, s.o, s.n, s.v, s.p) else null),
+    // GTPv2-C (3GPP TS 29.274, UDP 2123)
+    on(2123)(s => if (s.plen >= 8) dissectGtpv2(s.b, s.o, s.n, s.v, s.p) else null),
+    // PFCP (3GPP TS 29.244, UDP 8805)
+    on(8805)(s => if (s.plen >= 8) dissectPfcp(s.b, s.o, s.n, s.v, s.p) else null),
+    // DoIP (ISO 13400-2, UDP 13400 — vehicle discovery)
+    on(13400)(s => if (s.plen >= 8) dissectDoip(s.b, s.o, s.n, s.v, s.p) else null),
+    on(138)(udpNbdgm),
+    // BitTorrent DHT (KRPC over bencode, UDP 6881): top-level dict keys
+    // y (message kind) and q (query name)
+    on(6881) { s =>
+      if (s.plen >= 4 && s.o + 1 <= s.b.length && s.b(s.o) == 'd')
+        dissectBtDht(s.b, s.o, s.end, s.v, s.p)
+      else null
+    },
+    // the same swarm port carries uTP when the payload isn't bencoded
+    on(6881)(s => dissectBtUtp(s.b, s.o, s.n, s.v, s.p)),
+    on(1194)(udpOpenvpn),
+    // NAT-PMP (RFC 6886, UDP 5351): version 0, opcode 0–2 request /
+    // 128–130 response (the +128 response convention)
+    on(5351) { s =>
+      val op =
+        if (s.plen >= 2 && s.o + 2 <= s.b.length && u8(s.b, s.o) == 0) u8(s.b, s.o + 1) else -1
+      val name = if (op < 0) null else (op & 0x7f) match {
+        case 0 => "External Address"
+        case 1 => "Map UDP"
+        case 2 => "Map TCP"
+        case _ => null
+      }
+      if (name == null) null
+      else {
+        s.p += "nat-pmp"
+        s.v("nat-pmp.version") = 0L
+        s.v("nat-pmp.opcode") = op.toLong
+        s"$name ${if (op >= 128) "Response" else "Request"}"
+      }
+    },
+    on(69) { s =>
+      val info = dissectTftp(s.b, s.o, s.n, s.v, s.p)
+      // a request's CLIENT port identifies the transfer that follows on
+      // ephemeral ports (RFC 1350 §4: the server picks its own TID)
+      if (info != null && s.t.tftpPorts.size < 256) s.t.tftpPorts += (if (s.dp == 69) s.sp else s.dp)
+      info
+    },
+    on() { s =>
+      if (s.t.tftpPorts.contains(s.sp) || s.t.tftpPorts.contains(s.dp))
+        dissectTftp(s.b, s.o, s.n, s.v, s.p)
+      else null
+    },
+    on() { s =>
+      if (s.t.rtpPorts.contains(s.sp) || s.t.rtpPorts.contains(s.dp))
+        dissectRtp(s.b, s.o, s.n, s.v, s.p)
+      else null
+    },
+    // RTCP rides the SDP-announced RTP port + 1 (RFC 3550 §11)
+    on() { s =>
+      if (s.t.rtpPorts.contains(s.sp - 1) || s.t.rtpPorts.contains(s.dp - 1))
+        dissectRtcp(s.b, s.o, s.n, s.v, s.p)
+      else null
+    },
+    // VXLAN (RFC 7348): 8-byte header with the I flag, then an inner
+    // Ethernet frame dissected in nested (multi-occurrence) field mode
+    on(4789) { s =>
+      if (s.plen >= 8 && s.o + 8 <= s.b.length && (u8(s.b, s.o) & 0x08) != 0) {
+        s.p += "vxlan"
+        s.v("vxlan.flags") = u8(s.b, s.o).toLong
+        s.v("vxlan.vni") = u24(s.b, s.o + 4).toLong
+        val inner = nestedIn(s.v)(dissectEthFrom(s.b, s.o + 8, s.v, s.p, s.t, s.w))
+        if (inner != null) inner else "VXLAN"
+      } else null
+    },
+    on(37008)(udpTzsp),
+    on(6081)(udpGeneve),
+    on(7400 until 7900: _*) { s =>
+      // domain id comes from whichever port is RTPS-side: on a
+      // server->client reply the dst port is an ephemeral one and would
+      // yield a bogus domain (ADVICE r8)
+      val rtpsPort = if (s.dp >= 7400 && s.dp < 7900) s.dp else s.sp
+      dissectRtps(s.b, s.o, s.n, rtpsPort, s.v, s.p)
+    },
+    on(30001)(s => dissectMoldudp64(s.b, s.o, s.n, s.v, s.p)),
+    on(9300)(s => dissectSrt(s.b, s.o, s.n, s.v, s.p)),
+    on(3130)(s => dissectIcp(s.b, s.o, s.n, s.v, s.p)),
+    on(3544)(s => dissectTeredo(s.b, s.o, s.n, s.v, s.p, s.t, s.w)),
+    on(521)(s => dissectRipng(s.b, s.o, s.n, s.v, s.p)),
+    on(2048)(s => dissectWccp(s.b, s.o, s.n, s.v, s.p)),
+    on(427)(s => dissectSrvloc(s.b, s.o, s.n, s.v, s.p)),
+    on(2944)(s => dissectMegaco(s.b, s.o, s.n, s.v, s.p)),
+    on(2442)(s => dissectMqttsn(s.b, s.o, s.n, s.v, s.p)),
+    on(9600)(s => dissectFins(s.b, s.o, s.n, s.v, s.p)),
+    on(3671)(s => dissectKnxnetip(s.b, s.o, s.n, s.v, s.p)),
+    on(5678)(s => if (s.sp == 5678 && s.dp == 5678) dissectMndp(s.b, s.o, s.n, s.v, s.p) else null),
+    on(4790)(udpVxlanGpe),
+    // MPLS-over-UDP (RFC 7510, UDP 6635): the label stack + payload ride
+    // directly in the datagram
+    on(6635) { s =>
+      if (s.plen >= 8 && s.o + 4 <= s.b.length)
+        nestedIn(s.v)(dissectMpls(s.b, s.o, s.v, s.p, s.t, s.w))
+      else null
+    },
+    on(698)(s => dissectOlsr(s.b, s.o, s.n, s.v, s.p)),
+    on(646)(s => dissectLdp(s.b, s.o, s.n, s.v, s.p)),
+    on(5094)(s => dissectHartIp(s.b, s.o, s.n, s.v, s.p)),
+    on(623)(s => dissectRmcp(s.b, s.o, s.n, s.v, s.p)),
+    on(17754)(s => dissectZep(s.b, s.o, s.n, s.v, s.p)),
+    on(25826)(s => dissectCollectd(s.b, s.o, s.n, s.v, s.p)),
+    on(4729)(s => dissectGsmtap(s.b, s.o, s.n, s.v, s.p)),
+    on(37)(s => dissectTime(s.b, s.o, s.n, fromServer = s.sp == 37, s.v, s.p)),
+    on(19)(s => dissectChargen(s.b, s.o, s.n, s.v, s.p)),
+    on(7)(s => dissectEcho(s.b, s.o, s.n, fromServer = s.sp == 7, s.v, s.p)),
+    on(5351)(s => dissectPcp(s.b, s.o, s.n, s.v, s.p)),
+    on(496)(s => dissectAutoRp(s.b, s.o, s.n, s.v, s.p)),
+    on(1234)(s => dissectMp2t(s.b, s.o, s.n, s.v, s.p)),
+    on(111)(s => dissectPortmap(s.b, s.o, s.n, s.v, s.p)),
+    on(4569)(s => dissectIax2(s.b, s.o, s.n, s.v, s.p)),
+    on(177)(s => dissectXdmcp(s.b, s.o, s.n, s.v, s.p)),
+    on(6454)(s => dissectArtnet(s.b, s.o, s.n, s.v, s.p)),
+    on(3000)(s => dissectDis(s.b, s.o, s.n, s.v, s.p)),
+    on(7000)(s => dissectRx(s.b, s.o, s.n, s.v, s.p)),
+    on(19132)(s => dissectRaknet(s.b, s.o, s.n, s.v, s.p)),
+    on(3222)(s => dissectGlbp(s.b, s.o, s.n, s.v, s.p)),
+    on(464)(s => dissectKpasswd(s.b, s.o, s.n, s.v, s.p)),
+    on(631)(s => dissectCups(s.b, s.o, s.n, s.v, s.p)),
+    on(9000)(s => dissectUdt(s.b, s.o, s.n, s.v, s.p)),
+    on(635)(s => dissectMount(s.b, s.o, s.n, s.v, s.p)),
+    on(834)(s => dissectYpserv(s.b, s.o, s.n, s.v, s.p)),
+    on(654)(s => dissectAodv(s.b, s.o, s.n, s.v, s.p)),
+    on(854)(s => dissectDlep(s.b, s.o, s.n, s.v, s.p)),
+    on(5007)(s => dissectMelsec(s.b, s.o, s.n, s.v, s.p)),
+    on(20202)(s => dissectGvsp(s.b, s.o, s.n, s.v, s.p)),
+    on(9200)(s => dissectWsp(s.b, s.o, s.n, s.v, s.p)),
+    on(443)(s => dissectGquic(s.b, s.o, s.n, s.v, s.p)),
+    on(8600)(s => dissectAsterix(s.b, s.o, s.n, s.v, s.p)),
+    on(8004)(s => dissectCigi(s.b, s.o, s.n, s.v, s.p)),
+    on(6004)(s => dissectT38(s.b, s.o, s.n, s.v, s.p)),
+    on(4342)(s => dissectLispControl(s.b, s.o, s.n, s.v, s.p)),
+    on(4045)(s => dissectNlm(s.b, s.o, s.n, s.v, s.p)),
+    on(30002)(s => dissectZrtp(s.b, s.o, s.n, s.v, s.p)),
+    on(9201)(s => dissectWtp(s.b, s.o, s.n, s.v, s.p)),
+    // WTLS rides the secure WAP port (9202): record content type
+    on(9202) { s =>
+      val rt = if (s.plen >= 3 && s.o + 1 <= s.b.length) u8(s.b, s.o) & 0x0f else 0
+      if (rt < 1 || rt > 4) null
+      else {
+        s.p += "wtls"
+        s.v("wtls.record.type") = rt.toLong
+        rt match {
+          case 1 => "WTLS Change Cipher Spec"
+          case 2 => "WTLS Alert"
+          case 3 => "WTLS Handshake"
+          case _ => "WTLS Application Data"
+        }
+      }
+    },
+    on(5246)(s => dissectCapwap(s.b, s.o, s.n, s.v, s.p)),
+    on(4341)(udpLispData),
+    on(6696)(s => dissectBabel(s.b, s.o, s.n, s.v, s.p)),
+  )
 
   private val dhcpMsgNames: Map[Int, String] = Map(
     1 -> "Discover", 2 -> "Offer", 3 -> "Request", 4 -> "Decline",
@@ -6405,7 +6123,7 @@ object Dissect {
     * protected payload dissected in place (transport mode). */
   private def dissectAh(
       d: Array[Byte], off: Int, end: Int,
-      src: String, dst: String,
+      ip: Array[Byte], srcAt: Int, alen: Int,
       v: FieldVec,
       protos: mutable.ArrayBuffer[String],
       tracker: Tracker,
@@ -6422,8 +6140,8 @@ object Dissect {
     val hdrLen = (plen + 2) * 4
     val inner =
       if (hdrLen >= 12 && off + hdrLen < end) nxt match {
-        case 6  => dissectTcp(d, off + hdrLen, end, src, dst, v, protos, tracker, wanted)
-        case 17 => dissectUdp(d, off + hdrLen, end, src, dst, v, protos, tracker, wanted)
+        case 6  => dissectTcp(d, off + hdrLen, end, ip, srcAt, alen, v, protos, tracker, wanted)
+        case 17 => dissectUdp(d, off + hdrLen, end, ip, srcAt, alen, v, protos, tracker, wanted)
         case 1  => protos += "icmp"; dissectIcmp(d, off + hdrLen, v)
         case 50 => protos += "esp"; dissectEsp(d, off + hdrLen, end, v)
         case _  => null
@@ -7190,14 +6908,11 @@ object Dissect {
       }
     }
     if (msgType == 255 && p < off + len) {
-      val wasNested = v.nested
-      v.nested = true
-      val inner =
-        try (u8(d, p) >> 4) match {
-          case 4 => dissectIpv4(d, p, v, protos, tracker, wanted)
-          case 6 => dissectIpv6(d, p, v, protos, tracker, wanted)
-          case _ => null
-        } finally v.nested = wasNested
+      val inner = nestedIn(v)((u8(d, p) >> 4) match {
+        case 4 => dissectIpv4(d, p, v, protos, tracker, wanted)
+        case 6 => dissectIpv6(d, p, v, protos, tracker, wanted)
+        case _ => null
+      })
       if (inner != null) return inner
     }
     val mname = if (msgType == 255) "G-PDU" else s"Message Type $msgType"
@@ -8580,11 +8295,7 @@ object Dissect {
     }
     if (p < off + len && (u8(d, p) >> 4) == 6 && off + len - p >= 40) {
       if (!hasOrigin) protos += "teredo"
-      val wasNested = v.nested
-      v.nested = true
-      val inner =
-        try dissectIpv6(d, p, v, protos, tracker, wanted)
-        finally v.nested = wasNested
+      val inner = nestedIn(v)(dissectIpv6(d, p, v, protos, tracker, wanted))
       if (inner != null) return inner
       return "Teredo tunneled IPv6"
     }
@@ -8604,11 +8315,7 @@ object Dissect {
     if (ver != 3) return null
     protos += "etherip"
     v("etherip.ver") = ver.toLong
-    val wasNested = v.nested
-    v.nested = true
-    val inner =
-      try dissectEthFrom(d, off + 2, v, protos, tracker, wanted)
-      finally v.nested = wasNested
+    val inner = nestedIn(v)(dissectEthFrom(d, off + 2, v, protos, tracker, wanted))
     if (inner != null) inner else "EtherIP"
   }
 
@@ -12815,15 +12522,12 @@ object Dissect {
     v("nsh.spi") = sp >> 8
     v("nsh.si") = (sp & 0xff)
     if (hlen < 8 || off + hlen >= d.length) return "NSH"
-    val wasNested = v.nested
-    v.nested = true
-    val inner =
-      try nextProto match {
-        case 1 => dissectIpv4(d, off + hlen, v, protos, tracker, wanted)
-        case 2 => dissectIpv6(d, off + hlen, v, protos, tracker, wanted)
-        case 3 => dissectEthFrom(d, off + hlen, v, protos, tracker, wanted)
-        case _ => null
-      } finally v.nested = wasNested
+    val inner = nestedIn(v)(nextProto match {
+      case 1 => dissectIpv4(d, off + hlen, v, protos, tracker, wanted)
+      case 2 => dissectIpv6(d, off + hlen, v, protos, tracker, wanted)
+      case 3 => dissectEthFrom(d, off + hlen, v, protos, tracker, wanted)
+      case _ => null
+    })
     if (inner != null) inner else "NSH"
   }
 
